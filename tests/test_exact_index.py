@@ -255,12 +255,14 @@ def test_fuzz_lifecycle_equals_built_at_once(spark, tmp_path_factory):
         idx = str(root / "idx")
         next_id = [0]
 
-        def batch(n):
-            rows = [(next_id[0] + i, doc()) for i in range(n)]
+        def batch(n, texts=None):
+            texts = texts or [doc() for _ in range(n)]
+            rows = [(next_id[0] + i, t) for i, t in enumerate(texts)]
             next_id[0] += n
             return spark.createDataFrame(rows, "doc_id long, text string")
 
-        seed = batch(rng.randint(2, 5))
+        seed_texts = [doc() for _ in range(rng.randint(2, 5))]
+        seed = batch(len(seed_texts), seed_texts)
         X.write_exact_index(seed, idx, n_buckets=4)
         admitted = [seed]
         for _ in range(rng.randint(2, 4)):
@@ -312,7 +314,10 @@ def test_fuzz_lifecycle_equals_built_at_once(spark, tmp_path_factory):
         for b in admitted[1:]:
             ref = ref.unionByName(b)
         X.write_exact_index(ref, whole, n_buckets=4)
-        probe = batch(4)
+        # one probe text comes from the seed batch, so the probe always
+        # holds an indexed duplicate
+        probe = batch(4, [rng.choice(seed_texts)]
+                      + [doc() for _ in range(3)])
         got = {r.doc_id: (r.dup_of, r.keep)
                for r in X.dedup_exact_against_index(
                    spark, probe, idx).collect()}
