@@ -106,27 +106,17 @@ def _local_dir(uri: str) -> "str | None":
 
 
 def _pa_type(kind: str):
+    """pyarrow type of a Spark SQL type name: int/long/double/string,
+    or ``array<...>`` of one."""
     import pyarrow as pa
 
-    if kind == "int":
-        return pa.int32()
-    if kind == "long":
-        return pa.int64()
-    if kind == "double":
-        return pa.float64()
-    if kind == "string":
-        return pa.string()
-    if kind == "array<int>":
-        return pa.list_(pa.int32())
-    if kind == "array<long>":
-        return pa.list_(pa.int64())
-    if kind == "array<double>":
-        return pa.list_(pa.float64())
-    if kind == "array<array<double>>":
-        return pa.list_(pa.list_(pa.float64()))
-    if kind == "array<array<array<double>>>":
-        return pa.list_(pa.list_(pa.list_(pa.float64())))
-    raise ValueError(f"unknown meta column kind {kind!r}")
+    if kind.startswith("array<") and kind.endswith(">"):
+        return pa.list_(_pa_type(kind[len("array<"):-1]))
+    scalars = {"int": "int32", "long": "int64", "double": "float64",
+               "string": "string"}
+    if kind not in scalars:
+        raise ValueError(f"unknown meta column kind {kind!r}")
+    return pa.type_for_alias(scalars[kind])
 
 
 def try_write_meta_row(dir_uri: str, fields) -> bool:

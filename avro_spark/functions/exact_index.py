@@ -24,13 +24,10 @@ broadcast join back to the batch. Probe IO is bounded by the BATCH's
 distinct fingerprints, never the corpus; driver state likewise (with a
 broadcast-join fallback past ``max_pushdown_fps``).
 
-Crash discipline and concurrency are the family's shared contract
-(identical to the text/IVF-PQ indexes): ``'__appending__'`` marker
-with a ``pending_token`` first, commit last; a committed-token retry
-no-ops; a different batch against a dead append is refused; probes
-absorb retry-duplicate rows via (fingerprint, id) dropDuplicates;
-``compact_exact_index`` finish-the-swap; every mutating op under the
-single-writer lease. Ids keep their NATIVE type. No Python UDFs.
+Crash discipline and concurrency are the persisted indexes' shared
+contract (:mod:`._index_core`); probes absorb retry-duplicate rows via
+(fingerprint, id) dropDuplicates. Ids keep their NATIVE type. No
+Python UDFs.
 """
 
 from __future__ import annotations
@@ -40,13 +37,18 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import (
-    _gc_table_versions,
-    _native_id,
-    _vdir,
-    _versions_json,
-    _versions_of,
-    content_fingerprint,
+from . import _index_core as C
+from .dedup import _native_id, content_fingerprint
+
+_SPEC = C.IndexSpec(
+    name="exact", label="exact-dedup index", tables=("fps",),
+    fields=lambda d: {"n_buckets": d["n_buckets"], "id_col": d["id_col"],
+                      "n_docs": d["n_docs"]},
+    put=lambda spark, path, m: _write_exact_meta(
+        spark, path, m["n_buckets"], m["id_col"], m["status"],
+        m["n_docs"], m["token"], m["pending_token"], m["versions"]),
+    missing=("no exact-dedup index meta at {path!r}/meta — not a "
+             "write_exact_index index; rebuild it with write_exact_index"),
 )
 
 
@@ -82,162 +84,19 @@ def _write_exact_meta(
     pending_token: "Optional[str]" = None,
     versions: "Optional[dict]" = None,
 ) -> None:
-    from ._meta_io import try_write_meta_row
-
-    # local: one driver-side atomic file replace, no Spark job
-    if try_write_meta_row(f"{path}/meta", [
+    C.write_meta_row(spark, path, [
         ("n_buckets", "int", int(n_buckets)),
         ("id_col", "string", id_col),
         ("status", "string", status),
         ("n_docs", "long", int(n_docs)),
         ("token", "string", token),
         ("pending_token", "string", pending_token),
-        ("versions", "string", _versions_json(versions)),
-    ]):
-        return
-    spark.range(1).select(
-        F.lit(int(n_buckets)).cast("int").alias("n_buckets"),
-        F.lit(id_col).alias("id_col"),
-        F.lit(status).alias("status"),
-        F.lit(int(n_docs)).cast("long").alias("n_docs"),
-        F.lit(token).cast("string").alias("token"),
-        F.lit(pending_token).cast("string").alias("pending_token"),
-        F.lit(_versions_json(versions)).cast("string").alias("versions"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+        ("versions", "string", C._versions_json(versions)),
+    ])
 
 
 def _read_exact_meta(spark, path: str) -> dict:
-    from ._meta_io import try_read_meta_row
-
-    d = try_read_meta_row(f"{path}/meta")
-    if d is None:
-        try:
-            row = spark.read.parquet(f"{path}/meta").head()
-        except Exception as e:
-            raise ValueError(
-                f"no exact-dedup index meta at {path!r}/meta — not a "
-                "write_exact_index index; rebuild it with write_exact_index"
-            ) from e
-        d = row.asDict() if row is not None else {}
-    if not d:
-        raise ValueError(
-            "exact-dedup index meta is empty — the index is mid-rebuild "
-            "or corrupt; rebuild it with write_exact_index"
-        )
-    return {
-        "n_buckets": d["n_buckets"], "id_col": d["id_col"],
-        "status": d["status"], "n_docs": d["n_docs"],
-        "token": d.get("token"), "pending_token": d.get("pending_token"),
-        "versions": _versions_of(d),
-    }
-
-
-def _fps_dir(path: str, m: dict) -> str:
-    """Current physical dir of the fps table (version pointer in the
-    meta row — :func:`dedup._vdir`)."""
-    return _vdir(path, "fps", m["versions"].get("fps", 0))
-
-
-def _write_exact_index_unlocked(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 64,
-    mode: str = "overwrite",
-    append_token: "Optional[str]" = None,
-) -> None:
-    """Materialize the fingerprint index (module docstring has the
-    layout and the append/token contract)."""
-    spark = docs.sparkSession
-    prev_docs = 0
-    prev_token = None
-    versions: dict = {}
-    if mode == "append":
-        m = _read_exact_meta(spark, path)
-        versions = m["versions"]
-        if m["status"] == "__building__":
-            raise ValueError(
-                "index is mid-rebuild (status '__building__') — rebuild "
-                "it with write_exact_index(mode='overwrite')"
-            )
-        if append_token is not None and m["token"] == append_token:
-            return  # committed retry: structural no-op
-        if m["status"] == "__appending__":
-            if (m["pending_token"] is not None and append_token is not None
-                    and m["pending_token"] != append_token):
-                raise ValueError(
-                    f"index at {path!r} has an in-flight append with "
-                    f"token {m['pending_token']!r}; refusing append "
-                    f"with token {append_token!r} — re-run the dead "
-                    "append to completion first (appends are sequential)"
-                )
-        elif m["status"] != "committed":
-            raise ValueError(
-                f"index at {path!r} has status {m['status']!r} — finish "
-                "the in-flight maintenance first, then append"
-            )
-        if n_buckets not in (None, m["n_buckets"]):
-            raise ValueError(
-                f"append n_buckets={n_buckets} does not match the "
-                f"index's pinned bucket count {m['n_buckets']} — "
-                "drifted bucketing would hide fingerprints from "
-                "probes; pass n_buckets=None"
-            )
-        if id_col != m["id_col"]:
-            raise ValueError(
-                f"append id_col={id_col!r} does not match the index's "
-                f"pinned id column {m['id_col']!r}"
-            )
-        n_buckets = m["n_buckets"]
-        prev_docs = m["n_docs"]
-        prev_token = m["token"]
-        _write_exact_meta(spark, path, n_buckets, id_col, "__appending__",
-                          prev_docs, prev_token, append_token, versions)
-    elif mode == "overwrite":
-        if not n_buckets or n_buckets < 1:
-            raise ValueError("n_buckets must be a positive int")
-        _write_exact_meta(spark, path, n_buckets, id_col, "__building__",
-                          0)
-    else:
-        raise ValueError(f"bad mode: {mode}")
-    # ONE fingerprint pass feeds both the write and the doc count
-    # (persist, as the text index's tokenize pass does — without it the
-    # count re-reads the whole source)
-    fps = docs.select(
-        _checked_fp(text_col).alias("fingerprint"),
-        _native_id(id_col).alias(id_col),
-    ).withColumn(
-        "bucket", _bucket_expr(F.col("fingerprint"), n_buckets)
-    ).persist()
-    try:
-        # count FIRST: it materializes the cache as a PRE-WRITE
-        # snapshot. A batch whose plan PROBES this same index (a
-        # dedup-then-append pipeline) is otherwise snapshot-fragile:
-        # the append's commit refreshes Spark's by-path caches, and a
-        # post-write re-execution would see the batch's own rows in
-        # the index — here it silently returned n_batch=0 because
-        # every admitted doc suddenly "was" a duplicate of itself.
-        n_batch = fps.count()
-        fps_dir = _vdir(path, "fps", versions.get("fps", 0))
-        fps.repartition(n_buckets, "bucket") \
-            .sortWithinPartitions("bucket", "fingerprint", id_col) \
-            .write.mode(mode).partitionBy("bucket") \
-            .parquet(fps_dir)
-        if mode == "overwrite" and n_batch == 0:
-            # an empty corpus writes NO part files; pin the schema on
-            # disk (incl. the native id type) so later reads never hit
-            # UNABLE_TO_INFER_SCHEMA — same hazard as the text index
-            fps.drop("bucket").limit(0).coalesce(1) \
-                .write.mode("overwrite").parquet(f"{fps_dir}/bucket=0")
-    finally:
-        fps.unpersist()
-    _write_exact_meta(spark, path, n_buckets, id_col, "committed",
-                      prev_docs + n_batch,
-                      append_token if mode == "append" else None,
-                      versions=versions)
-    if mode == "overwrite":
-        _gc_table_versions(path, "fps", 0)
+    return C.read_meta(spark, path, _SPEC)
 
 
 def write_exact_index(
@@ -249,16 +108,75 @@ def write_exact_index(
     mode: str = "overwrite",
     append_token: "Optional[str]" = None,
 ) -> None:
-    """Public face of :func:`_write_exact_index_unlocked` (see its
-    docstring), under the index's single-writer lease."""
-    from .dedup import acquire_index_lease, release_index_lease
+    """Materialize the fingerprint index (module docstring has the
+    layout). ``mode="append"`` grows it with new documents; the bucket
+    count and id column come from the meta row (supplied values that
+    don't match the pinned ones are refused). ``append_token`` gives
+    exactly-once blind retries; markers, tokens and the single-writer
+    lease follow :mod:`._index_core`."""
+    with C.index_lease(path, f"exact-{mode}"):
+        spark = docs.sparkSession
+        if mode == "append":
+            m = _read_exact_meta(spark, path)
+            if C.admit_append(_SPEC, path, m, append_token):
+                return
+            if n_buckets not in (None, m["n_buckets"]):
+                raise ValueError(
+                    f"append n_buckets={n_buckets} does not match the "
+                    f"index's pinned bucket count {m['n_buckets']} — "
+                    "drifted bucketing would hide fingerprints from "
+                    "probes; pass n_buckets=None"
+                )
+            if id_col != m["id_col"]:
+                raise ValueError(
+                    f"append id_col={id_col!r} does not match the index's "
+                    f"pinned id column {m['id_col']!r}"
+                )
+            n_buckets = m["n_buckets"]
+        elif mode == "overwrite":
+            if not n_buckets or n_buckets < 1:
+                raise ValueError("n_buckets must be a positive int")
+            m = C.fresh_meta(n_buckets=n_buckets, id_col=id_col, n_docs=0)
+        else:
+            raise ValueError(f"bad mode: {mode}")
 
-    lt = acquire_index_lease(path, f"exact-{mode}")
-    try:
-        _write_exact_index_unlocked(
-            docs, path, id_col, text_col, n_buckets, mode, append_token)
-    finally:
-        release_index_lease(path, lt)
+        def body(m: dict) -> dict:
+            # ONE fingerprint pass feeds both the write and the doc
+            # count (persist, as the text index's tokenize pass does —
+            # without it the count re-reads the whole source)
+            fps = docs.select(
+                _checked_fp(text_col).alias("fingerprint"),
+                _native_id(id_col).alias(id_col),
+            ).withColumn(
+                "bucket", _bucket_expr(F.col("fingerprint"), n_buckets)
+            ).persist()
+            try:
+                # count FIRST: it materializes the cache as a PRE-WRITE
+                # snapshot. A batch whose plan PROBES this same index (a
+                # dedup-then-append pipeline) is otherwise
+                # snapshot-fragile: the append's commit refreshes
+                # Spark's by-path caches, and a post-write re-execution
+                # would see the batch's own rows in the index — here it
+                # silently returned n_batch=0 because every admitted doc
+                # suddenly "was" a duplicate of itself.
+                n_batch = fps.count()
+                fps_dir = C.table_dir(path, m, "fps")
+                fps.repartition(n_buckets, "bucket") \
+                    .sortWithinPartitions("bucket", "fingerprint", id_col) \
+                    .write.mode(mode).partitionBy("bucket") \
+                    .parquet(fps_dir)
+                if mode == "overwrite" and n_batch == 0:
+                    # an empty corpus writes NO part files; pin the
+                    # schema on disk (incl. the native id type) so later
+                    # reads never hit UNABLE_TO_INFER_SCHEMA — same
+                    # hazard as the text index
+                    fps.drop("bucket").limit(0).coalesce(1) \
+                        .write.mode("overwrite").parquet(f"{fps_dir}/bucket=0")
+            finally:
+                fps.unpersist()
+            return {"n_docs": m["n_docs"] + n_batch}
+
+        C.write_cycle(spark, path, _SPEC, mode, append_token, m, body)
 
 
 def dedup_exact_against_index(
@@ -294,12 +212,7 @@ def dedup_exact_against_index(
     ``max_literal_fps`` when probing a HUGE index with a mid-sized
     batch and the footer pruning is worth seconds of driver time."""
     m = _read_exact_meta(spark, path)
-    if m["status"] != "committed":
-        raise ValueError(
-            f"exact-dedup index at {path!r} has status {m['status']!r} "
-            "— a rebuild or append died part-way; re-run it to "
-            "completion, then probe"
-        )
+    C.check_probe(_SPEC, path, m)
     if id_col != m["id_col"]:
         raise ValueError(
             f"probe id_col={id_col!r} does not match the index's "
@@ -309,12 +222,11 @@ def dedup_exact_against_index(
         _native_id(id_col).alias(id_col),
         _checked_fp(text_col).alias("fingerprint"),
     )
-    idx = spark.read.parquet(_fps_dir(path, m))
-    from .dedup import _PUSHDOWN_MIN_INDEX_BYTES, _dir_bytes_at_least
-
+    idx = spark.read.parquet(C.table_dir(path, m, "fps"))
     if pushdown_min_index_bytes is None:
-        pushdown_min_index_bytes = _PUSHDOWN_MIN_INDEX_BYTES
-    if not _dir_bytes_at_least(_fps_dir(path, m), pushdown_min_index_bytes):
+        pushdown_min_index_bytes = C._PUSHDOWN_MIN_INDEX_BYTES
+    if not C._dir_bytes_at_least(C.table_dir(path, m, "fps"),
+                                 pushdown_min_index_bytes):
         # SCALE-ADAPTIVE (r11, guide §1.2): below one scan task's worth
         # of fps store neither pruning lever can cut IO, and the
         # fingerprint collect is an extra action per probe — attach the
@@ -365,116 +277,55 @@ def dedup_exact_against_index(
 
 
 def compact_exact_index(spark, path: str) -> None:
-    """Public face of :func:`_compact_exact_index_unlocked`, under the
-    single-writer lease."""
-    from .dedup import acquire_index_lease, release_index_lease
-
-    lt = acquire_index_lease(path, "exact-compact")
-    try:
-        _compact_exact_index_unlocked(spark, path)
-    finally:
-        release_index_lease(path, lt)
-
-
-def _compact_exact_index_unlocked(spark, path: str) -> None:
     """Collapse append-accumulated small files, drop retry-duplicate
-    rows, restore the sorted layout. The compacted table is written to
-    the NEXT version dir (``fps_v<N+1>``, :func:`dedup._vdir`) and the
-    commit is ONE meta-row overwrite flipping the pointer — no
-    remove-then-move window, so the swap is crash-safe on stores
-    without atomic rename and probes keep working THROUGHOUT (token
-    preserved). A pre-r10 index left mid-swap (``'__compacting__'``)
-    is finished with the legacy move-based recovery."""
-    from .dedup import _dir_exists, _mv_dir, _rm_dir
+    rows, restore the sorted layout — committed through the shared
+    versioned swap (:func:`._index_core.compact`, counters and token
+    preserved), under the single-writer lease."""
 
-    m = _read_exact_meta(spark, path)
+    def rewrite(m: dict, dirs: dict) -> None:
+        id_col = m["id_col"]
+        deduped = spark.read.parquet(C.table_dir(path, m, "fps")) \
+            .dropDuplicates(["fingerprint", id_col])
+        deduped.repartition(m["n_buckets"], F.col("bucket")) \
+            .sortWithinPartitions("bucket", "fingerprint", id_col) \
+            .write.mode("overwrite").partitionBy("bucket") \
+            .parquet(dirs["fps"])
+        if m["n_docs"] == 0:
+            # empty seed index (a supported state — dedup_exact_stream
+            # starts from one): the compacted table would be FILELESS
+            # and every later probe would die with
+            # UNABLE_TO_INFER_SCHEMA. Re-pin the schema (incl. the
+            # native id type) — the build-time hazard at compact time,
+            # same guard as compact_text_index's sum_dl==0 branch.
+            deduped.drop("bucket").limit(0).coalesce(1) \
+                .write.mode("overwrite").parquet(f"{dirs['fps']}/bucket=0")
 
-    if m["status"] == "__compacting__":
-        # legacy (pre-r10) mid-swap recovery
-        comp = f"{path}/fps_compact"
-        if _dir_exists(comp):
-            _rm_dir(f"{path}/fps")
-            _mv_dir(comp, f"{path}/fps")
-        _write_exact_meta(spark, path, m["n_buckets"], m["id_col"],
-                          "committed", m["n_docs"], m["token"])
-        return
-    if m["status"] != "committed":
-        raise ValueError(
-            f"index at {path!r} has status {m['status']!r} — finish the "
-            "in-flight append first (re-run the same append), then "
-            "compact"
-        )
-    idx = spark.read.parquet(_fps_dir(path, m))
-    id_col = m["id_col"]
-    new_v = m["versions"].get("fps", 0) + 1
-    new_dir = _vdir(path, "fps", new_v)
-    deduped = idx.dropDuplicates(["fingerprint", id_col])
-    deduped.repartition(m["n_buckets"], F.col("bucket")) \
-        .sortWithinPartitions("bucket", "fingerprint", id_col) \
-        .write.mode("overwrite").partitionBy("bucket") \
-        .parquet(new_dir)
-    if m["n_docs"] == 0:
-        # empty seed index (a supported state — dedup_exact_stream
-        # starts from one): the compacted table would be FILELESS and
-        # every later probe would die with UNABLE_TO_INFER_SCHEMA.
-        # Re-pin the schema (incl. the native id type) — the
-        # build-time hazard at compact time, same guard as
-        # compact_text_index's sum_dl==0 branch (r9 ADVICE medium).
-        deduped.drop("bucket").limit(0).coalesce(1) \
-            .write.mode("overwrite").parquet(f"{new_dir}/bucket=0")
-    # THE commit: one meta overwrite flips the fps pointer
-    _write_exact_meta(spark, path, m["n_buckets"], m["id_col"],
-                      "committed", m["n_docs"], m["token"],
-                      versions={**m["versions"], "fps": new_v})
-    _gc_table_versions(path, "fps", new_v)
+    with C.index_lease(path, "exact-compact"):
+        C.compact(spark, path, _SPEC, rewrite)
 
 
 def exact_index_stats(spark, path: str) -> dict:
     """Health report (footer-only except one count-vs-distinct job):
     meta status/count, fps file count + footer rows + bytes, bucket
     skew, duplicate (fingerprint, id) rows (append-retry residue)."""
-    import collections
-    import os
-
-    import pyarrow.parquet as pq
-
-    from .dedup import _list_parquet_files, _open_listed
-
     m = _read_exact_meta(spark, path)
-    out = {
-        "status": m["status"], "n_buckets": m["n_buckets"],
-        "n_docs": m["n_docs"],
-    }
-    rows = 0
-    size = 0
-    part_rows: collections.Counter = collections.Counter()
-    fps_dir = _fps_dir(path, m)
-    files = _list_parquet_files(fps_dir, recursive=True)
-    for fs_, fp in files:
-        with _open_listed(fs_, fp) as fh:
-            nr = pq.ParquetFile(fh).metadata.num_rows
-        rows += nr
-        part_rows[os.path.dirname(fp)] += nr
-        size += (os.path.getsize(fp) if fs_ is None
-                 else fs_.get_file_info(fp).size)
-    out["fps_files"] = len(files)
-    out["fps_rows"] = rows
-    out["fps_bytes"] = size
-    max_pr = max(part_rows.values()) if part_rows else 0
-    mean_pr = (rows / len(part_rows)) if part_rows else 0.0
-    out["max_rows_per_bucket"] = int(max_pr)
-    out["bucket_row_skew"] = round(max_pr / mean_pr, 2) if mean_pr else 0.0
+    fps_dir = C.table_dir(path, m, "fps")
+    scan = C.scan_footers(fps_dir)
     df = spark.read.parquet(fps_dir)
     dup = df.count() - df.dropDuplicates(
         ["fingerprint", m["id_col"]]).count()
-    out["duplicate_rows"] = int(dup)
-    # maintenance advisory (family symmetry with ivf_index_stats):
-    # bucket routing is hash-pinned, so compaction is the one remedy
-    n_buckets = max(len(part_rows), 1)
-    out["maintenance_hint"] = (
-        "compact" if dup > 0 or len(files) > 8 * n_buckets else None
-    )
-    return out
+    return {
+        "status": m["status"], "n_buckets": m["n_buckets"],
+        "n_docs": m["n_docs"],
+        "fps_files": scan.files, "fps_rows": scan.rows,
+        "fps_bytes": scan.bytes,
+        "max_rows_per_bucket": int(scan.max_part_rows),
+        "bucket_row_skew": scan.row_skew,
+        "duplicate_rows": int(dup),
+        # bucket routing is hash-pinned, so compaction is the one remedy
+        "maintenance_hint": C.maintenance_hint(
+            scan, dup > 0 or scan.fragmented),
+    }
 
 
 # --------------------------------- streaming face of exact incremental dedup
@@ -486,44 +337,26 @@ def _stream_exact_sink(
     admit: str = "novel",
 ):
     """The foreachBatch callable behind :func:`dedup_exact_stream`,
-    factored out so replay idempotence is directly testable. Per
-    micro-batch, in crash-safe order (the MinHash streaming sink's
-    shape):
-
-    1. recorded batch id → return (exactly-once across restarts);
-    2. if the index's meta already carries this batch's token —
-       committed, or pending on a dead mid-append attempt — the batch
-       WAS probed before any of it entered the index, so the replay
-       REUSES the committed ``{decisions_path}/batch=<id>/`` instead
-       of re-probing an index that now contains the batch's own docs
-       (which would mark every admitted doc a duplicate of itself —
-       the crash window the MinHash sink closed in r9);
-    3. otherwise WITHIN-batch exact dedup first (:func:`dedup.
-       exact_dedup` — lowest id per content wins), probe the survivors,
-       and OVERWRITE this batch's decisions dir (a replay REPLACES,
-       never doubles);
-    4. append the admitted docs (``admit="novel"``: only keep=true
-       survivors; ``"all"``: every survivor) with
-       ``append_token=f"batch{batch_id}"`` — a committed-token retry
-       no-ops, a crash mid-append heals on the same-token retry;
-    5. record the batch id LAST as the whole-batch commit marker."""
+    factored out so replay idempotence is directly testable. Inside the
+    shared batch bookkeeping (:func:`._index_core.registry_sink`), per
+    micro-batch: WITHIN-batch exact dedup first (:func:`dedup.
+    exact_dedup` — lowest id per content wins); unless the batch was
+    already probed (:func:`._index_core.probed_already`), probe the
+    survivors and OVERWRITE this batch's ``{decisions_path}/batch=<id>/``
+    (a replay REPLACES, never doubles); then append the admitted docs
+    (``admit="novel"``: only keep=true survivors; ``"all"``: every
+    survivor) with the batch token — a committed-token retry no-ops, a
+    crash mid-append heals on the same-token retry."""
     if admit not in ("novel", "all"):
         raise ValueError(f"bad admit: {admit}")
 
-    from .dedup import _append_batch_registry, _read_batch_registry, exact_dedup
+    from .dedup import exact_dedup
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def apply(batch_df: DataFrame, batch_id: int, token: str) -> None:
         spark = batch_df.sparkSession
-        applied = _read_batch_registry(spark, f"{index_path}/batches")
-        if batch_id in applied:
-            return
-        token = f"batch{batch_id}"
         m = _read_exact_meta(spark, index_path)
-        probed_already = m["token"] == token or (
-            m["status"] == "__appending__"
-            and m["pending_token"] == token)
         survivors = exact_dedup(batch_df, id_col, text_col)
-        if not probed_already:
+        if not C.probed_already(m, token):
             decisions = dedup_exact_against_index(
                 spark, survivors, index_path, id_col, text_col)
             decisions.write.mode("overwrite").parquet(
@@ -538,9 +371,8 @@ def _stream_exact_sink(
         write_exact_index(admitted, index_path, id_col, text_col,
                           n_buckets=None, mode="append",
                           append_token=token)
-        _append_batch_registry(spark, f"{index_path}/batches", batch_id)
 
-    return sink
+    return C.registry_sink(index_path, apply)
 
 
 def dedup_exact_stream(
@@ -561,14 +393,7 @@ def dedup_exact_stream(
     (:func:`write_exact_index` over the seed corpus — possibly empty).
     One streaming query per index (writer lease). Returns the started
     ``StreamingQuery``."""
-    sink = _stream_exact_sink(index_path, decisions_path, id_col,
-                              text_col, admit)
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return C.start_stream(
+        df, _stream_exact_sink(index_path, decisions_path, id_col,
+                               text_col, admit),
+        checkpoint_dir, trigger_available_now, query_name)

@@ -46,34 +46,15 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import _index_core as C
 from .similarity import (
     _argmax_centroid,
-    _matrix_lit,
-    _normalize_rows,
+    _probe_positions,
     as_double,
     dot,
     dot_fast,
     l2_norm,
 )
-
-
-def _probe_positions(vec, centroids, nprobe: int):
-    """Top-``nprobe`` centroid positions by cosine for ``vec`` — the
-    IVF probe expression (sim desc, ties → lowest position, matching
-    :func:`similarity._argmax_centroid`'s assignment tie-break)."""
-    cmat = _matrix_lit(_normalize_rows(centroids))
-    scored = F.transform(
-        cmat,
-        lambda c, i: F.struct(
-            dot(vec, c).alias("sim"),
-            (-i).cast("int").alias("ncid"),
-            i.cast("int").alias("cid"),
-        ),
-    )
-    return F.transform(
-        F.slice(F.reverse(F.array_sort(scored)), 1, nprobe),
-        lambda s: s["cid"],
-    )
 
 
 def semantic_dedup(
@@ -231,50 +212,29 @@ def _stream_semantic_sink(
     nprobe: int = 4,
 ):
     """The foreachBatch callable behind :func:`semantic_dedup_stream`,
-    factored out so replay idempotence is directly testable. Per
-    micro-batch, in crash-safe order (the exact-dedup streaming sink's
-    shape, :func:`exact_index._stream_exact_sink`):
-
-    1. recorded batch id → return (exactly-once across restarts);
-    2. if the IVF index's meta already carries this batch's token
-       (committed, or pending on a dead mid-append attempt), the batch
-       WAS probed before any of it entered the index — the replay
-       REUSES the committed ``{decisions_path}/batch=<id>/`` instead
-       of re-probing an index that now contains the batch's own
-       vectors (which would mark every admitted vector a near-dup of
-       itself);
-    3. otherwise WITHIN-batch semantic dedup first
-       (:func:`semantic_dedup` against the index's PINNED centroids —
-       lowest id per ε-ball wins), probe the survivors
-       (:func:`semantic_dedup_against_index`), and OVERWRITE this
-       batch's decisions dir (a replay REPLACES, never doubles);
-    4. append the admitted vectors (``admit="novel"``: keep=true
-       survivors; ``"all"``: every survivor) with
-       ``append_token=f"batch{batch_id}"`` — a committed-token retry
-       no-ops, a crash mid-append heals on the same-token retry;
-    5. record the batch id LAST as the whole-batch commit marker."""
+    factored out so replay idempotence is directly testable — the
+    exact-dedup sink's shape (:func:`exact_index._stream_exact_sink`)
+    over the IVF index: WITHIN-batch semantic dedup first
+    (:func:`semantic_dedup` against the index's PINNED centroids —
+    lowest id per ε-ball wins), the survivors probed
+    (:func:`semantic_dedup_against_index`) into this batch's
+    decisions dir, and the admitted vectors (``admit="novel"``:
+    keep=true survivors; ``"all"``: every survivor) appended with the
+    batch token."""
     if admit not in ("novel", "all"):
         raise ValueError(f"bad admit: {admit}")
 
-    from .dedup import _append_batch_registry, _read_batch_registry
     from .similarity import _read_ivf_meta, write_ivf_index
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def apply(batch_df: DataFrame, batch_id: int, token: str) -> None:
         spark = batch_df.sparkSession
-        applied = _read_batch_registry(spark, f"{index_path}/batches")
-        if batch_id in applied:
-            return
-        token = f"batch{batch_id}"
         m = _read_ivf_meta(spark, index_path)
-        probed_already = m["token"] == token or (
-            m["status"] == "__appending__"
-            and m["pending_token"] == token)
         within = semantic_dedup(batch_df, m["centroids"], threshold,
                                 id_col, vec_col)
         survivors = batch_df.join(
             F.broadcast(within.where("keep").select(id_col)),
             id_col, "left_semi")
-        if not probed_already:
+        if not C.probed_already(m, token):
             decisions = semantic_dedup_against_index(
                 spark, index_path, survivors, threshold, id_col,
                 vec_col, nprobe=nprobe)
@@ -289,9 +249,8 @@ def _stream_semantic_sink(
                                  "left_semi")
         write_ivf_index(admitted, None, index_path, id_col, vec_col,
                         mode="append", append_token=token)
-        _append_batch_registry(spark, f"{index_path}/batches", batch_id)
 
-    return sink
+    return C.registry_sink(index_path, apply)
 
 
 def semantic_dedup_stream(
@@ -320,17 +279,10 @@ def semantic_dedup_stream(
     supported here: IVF needs trained centroids; seed with
     :func:`similarity.kmeans_centroids`). One streaming query per
     index (writer lease). Returns the started ``StreamingQuery``."""
-    sink = _stream_semantic_sink(index_path, decisions_path, threshold,
-                                 id_col, vec_col, admit, nprobe)
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return C.start_stream(
+        df, _stream_semantic_sink(index_path, decisions_path, threshold,
+                                  id_col, vec_col, admit, nprobe),
+        checkpoint_dir, trigger_available_now, query_name)
 
 
 def semantic_dedup_keepers(

@@ -37,6 +37,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import _index_core as C
+
 
 def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -347,6 +349,27 @@ def _argmax_centroid(vec: Column, centroids: Sequence[Sequence[float]]) -> Colum
     return _let(as_double(vec), pick)
 
 
+def _probe_positions(vec: Column, centroids: Sequence[Sequence[float]],
+                     nprobe: int) -> Column:
+    """Top-``nprobe`` centroid positions by cosine for ``vec`` — the
+    IVF probe expression. Sim desc, ties → lowest position (the middle
+    struct field), matching :func:`_argmax_centroid`'s assignment
+    tie-break, so tied rows are always in some probe's scan set."""
+    cmat = _matrix_lit(_normalize_rows(centroids))
+    scored = F.transform(
+        cmat,
+        lambda c, i: F.struct(
+            dot(vec, c).alias("sim"),
+            (-i).cast("int").alias("ncid"),
+            i.cast("int").alias("cid"),
+        ),
+    )
+    return F.transform(
+        F.slice(F.reverse(F.array_sort(scored)), 1, nprobe),
+        lambda s: s["cid"],
+    )
+
+
 def assign_centroids(
     vectors: DataFrame,
     centroids: Sequence[Sequence[float]],
@@ -446,51 +469,20 @@ def knn_ivf(
         l2_norm(vec_col, dim).alias("_nv"),
         _argmax_centroid(F.col(vec_col), centroids).alias("centroid_id"),
     )
-    cmat = _matrix_lit(_normalize_rows(centroids))
-
-    def probes(q: Column) -> Column:
-        # middle field -cid: after reverse (sim desc) ties prefer the
-        # LOWEST centroid id — matching _argmax_centroid's assignment
-        # tie-break, so tied rows are always in some probe's scan set
-        scored = F.transform(
-            cmat,
-            lambda c, i: F.struct(
-                dot(q, c).alias("sim"),
-                (-i).cast("int").alias("ncid"),
-                i.cast("int").alias("cid"),
-            ),
-        )
-        return F.transform(
-            F.slice(F.reverse(F.array_sort(scored)), 1, nprobe), lambda s: s["cid"]
-        )
-
     probe_sets = queries.select(
         F.col(query_id_col),
         F.col(query_vec_col),
         l2_norm(query_vec_col, dim).alias("_nq"),
-        _let(as_double(F.col(query_vec_col)), probes).alias("probe_cids"),
+        _let(as_double(F.col(query_vec_col)),
+             lambda q: _probe_positions(q, centroids, nprobe))
+        .alias("probe_cids"),
     )
     cond = F.array_contains(F.col("probe_cids"), F.col("centroid_id"))
     if exclude_self:
         cond = cond & (F.col(id_col) != F.col(query_id_col))
     cand = assigned.join(F.broadcast(probe_sets), cond)
-    denom = F.col("_nv") * F.col("_nq")
-    scored = cand.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.when(
-            denom > 0,
-            dot_fast(vec_col, query_vec_col, dim) / denom,
-        )
-        .otherwise(F.lit(0.0))
-        .alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, "cosine")
-    )
+    return _score_ivf_cand(
+        cand, k, id_col, vec_col, query_id_col, query_vec_col, dim)
 
 
 # ------------------------------------------------ persisted IVF index
@@ -501,6 +493,33 @@ def knn_ivf(
 #: sizes the join instead of forcing a huge fleet onto the driver)
 _EQUIJOIN_FLEET = 1024
 _BROADCAST_FLEET_CAP = 100_000
+
+
+def _centroid_fields(d: dict) -> dict:
+    """The centroid-partitioned indexes' (IVF, IVF-PQ) own meta fields."""
+    cents = [[float(x) for x in c] for c in d["centroids"]]
+    dir_ids = d.get("dir_ids")
+    return {
+        "centroids": cents, "dim": d["dim"], "norm": d["norm"],
+        "rows": d["rows"], "split_cid": d.get("split_cid"),
+        # pre-r10 meta rows: position i stored under centroid_id=i (the
+        # identity mapping)
+        "dir_ids": ([int(x) for x in dir_ids] if dir_ids is not None
+                    else list(range(len(cents)))),
+    }
+
+
+_SPEC = C.IndexSpec(
+    name="ivf", label="IVF index", tables=("data",),
+    fields=_centroid_fields,
+    put=lambda spark, path, m: _write_ivf_meta(
+        spark, path, m["centroids"], m["status"], m["rows"], m["token"],
+        m["pending_token"], versions=m["versions"], dir_ids=m["dir_ids"]),
+    missing=("no IVF index meta at {path!r}/meta — not a "
+             "write_ivf_index index (or a pre-r8 layout); rebuild it "
+             "with write_ivf_index"),
+    rows_table="data",
+)
 
 
 def _write_ivf_meta(
@@ -516,28 +535,18 @@ def _write_ivf_meta(
     dir_ids: "Optional[Sequence[int]]" = None,
 ) -> None:
     """One meta row pinning the centroid matrix the data was assigned
-    with (plus a status marker, the committed row count, and the LAST
-    applied append token — the streaming sink's exactly-once handle).
-    ``pending_token`` rides only in the ``'__appending__'`` marker and
-    names the IN-FLIGHT append, so crash recovery can verify a retry is
-    the same batch instead of silently adopting a different batch's
-    data. ``split_cid`` rides only in the legacy ``'__splitting__'``
-    marker (pre-r10 splits) and names the partition being split.
-    ``versions`` is the data-table version pointer (compaction commits
-    by overwriting it); ``dir_ids[i]`` is the PHYSICAL
+    with, the committed row count and the shared status / token /
+    version-pointer columns (:mod:`._index_core`). ``split_cid`` rides
+    only in the legacy ``'__splitting__'`` marker (pre-r10 splits) and
+    names the partition being split. ``dir_ids[i]`` is the PHYSICAL
     ``centroid_id=`` partition holding matrix position ``i``'s rows —
     the indirection that lets a split write its new partitions under
     FRESH ids and commit with this one overwrite (a partition id named
     by no committed meta row is invisible to probes and dead by
-    construction). Written via ``spark.range`` + plan literals — pure
-    JVM, no Python-worker job."""
-    from ._meta_io import try_write_meta_row
-    from .dedup import _versions_json
-
+    construction)."""
     if dir_ids is None:
         dir_ids = list(range(len(centroids)))
-    # local: one driver-side atomic file replace, no Spark job
-    if try_write_meta_row(f"{path}/meta", [
+    C.write_meta_row(spark, path, [
         ("centroids", "array<array<double>>",
          [[float(x) for x in c] for c in centroids]),
         ("dim", "int", int(len(centroids[0]))),
@@ -548,83 +557,37 @@ def _write_ivf_meta(
         ("pending_token", "string", pending_token),
         ("split_cid", "int",
          int(split_cid) if split_cid is not None else None),
-        ("versions", "string", _versions_json(versions)),
+        ("versions", "string", C._versions_json(versions)),
         ("dir_ids", "array<int>", [int(d) for d in dir_ids]),
-    ]):
-        return
-    spark.range(1).select(
-        _matrix_lit(centroids).alias("centroids"),
-        F.lit(len(centroids[0])).cast("int").alias("dim"),
-        F.lit("l2-cosine").alias("norm"),
-        F.lit(status).alias("status"),
-        F.lit(int(rows)).cast("long").alias("rows"),
-        F.lit(token).cast("string").alias("token"),
-        F.lit(pending_token).cast("string").alias("pending_token"),
-        F.lit(split_cid).cast("int").alias("split_cid"),
-        F.lit(_versions_json(versions)).cast("string").alias("versions"),
-        F.lit([int(d) for d in dir_ids]).alias("dir_ids"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    ])
 
 
 def _read_ivf_meta(spark: "SparkSession", path: str) -> dict:
-    from ._meta_io import try_read_meta_row
-
-    d = try_read_meta_row(f"{path}/meta")
-    if d is None:
-        try:
-            row = spark.read.parquet(f"{path}/meta").head()
-        except Exception as e:  # AnalysisException: no meta dir at all
-            raise ValueError(
-                f"no IVF index meta at {path!r}/meta — not a "
-                "write_ivf_index index (or a pre-r8 layout); rebuild it "
-                "with write_ivf_index"
-            ) from e
-        d = row.asDict() if row is not None else {}
-    if not d:
-        raise ValueError(
-            "IVF index meta is empty — the index is mid-rebuild or "
-            "corrupt; rebuild it with write_ivf_index"
-        )
-    from .dedup import _versions_of
-    cents = [[float(x) for x in c] for c in d["centroids"]]
-    dir_ids = d.get("dir_ids")
-    return {
-        "centroids": cents,
-        "dim": d["dim"], "norm": d["norm"],
-        "status": d["status"], "rows": d["rows"],
-        # pre-token meta rows (early r8) read as never-appended-by-token
-        "token": d.get("token"),
-        "pending_token": d.get("pending_token"),
-        "split_cid": d.get("split_cid"),
-        # pre-r10 meta rows: tables at v0, position i stored under
-        # centroid_id=i (the identity mapping)
-        "versions": _versions_of(d),
-        "dir_ids": ([int(x) for x in dir_ids] if dir_ids is not None
-                    else list(range(len(cents)))),
-    }
+    return C.read_meta(spark, path, _SPEC)
 
 
 def _ivf_data_dir(path: str, m: dict) -> str:
-    """Current physical dir of the data table (version pointer in the
-    meta row — :func:`dedup._vdir`)."""
-    from .dedup import _vdir
-
-    return _vdir(path, "data", m["versions"].get("data", 0))
+    """Current physical dir of the data table."""
+    return C.table_dir(path, m, "data")
 
 
 def _dir_of_position(dir_ids: "Sequence[int]"):
     """Column fn: matrix position → physical ``centroid_id`` partition
     value, via the meta row's ``dir_ids`` indirection (an int-array
-    literal lookup — codegen'd, no join)."""
+    literal lookup — codegen'd, no join). A null position (the JVM
+    assignment of a null vector) stays null, so the row lands in the
+    default partition no probe scans — guarded explicitly, because
+    ``element_at`` over the UDF's null reads the LAST element."""
     arr = F.lit([int(d) for d in dir_ids])
 
     def to_dir(pos: Column) -> Column:
-        return F.element_at(arr, pos.cast("int") + F.lit(1))
+        return F.when(pos.isNotNull(),
+                      F.element_at(arr, pos.cast("int") + F.lit(1)))
 
     return to_dir
 
 
-def _write_ivf_index_unlocked(
+def write_ivf_index(
     vectors: DataFrame,
     centroids: Optional[Sequence[Sequence[float]]],
     path: str,
@@ -648,128 +611,81 @@ def _write_ivf_index_unlocked(
     The meta row closes the silent-drift hole: probes read the
     centroids FROM the index (a caller-supplied list that doesn't match
     is refused loudly — retrained centroids would prune the WRONG
-    partitions and silently return low-recall neighbors). The marker
-    discipline mirrors the MinHash index's: overwrite flips status to
-    ``'__building__'`` first and commits last; ``mode="append"`` (grow
-    the index with new vectors — ``centroids=None`` reuses the stored
-    matrix, a supplied list must match it exactly) flips to
-    ``'__appending__'`` around the data write and records the committed
-    row count, so a retried append after a crash detects whether the
-    dead attempt's data landed (parquet-footer count vs meta rows — the
-    standard job-commit atomicity assumption) and never double-appends.
-    ``append_token`` strengthens that to EXACTLY-ONCE across callers
-    that retry whole batches (the streaming sink's shape): the token of
-    the last committed append rides in the meta row, and an append
-    whose token matches it returns without touching the data — so a
-    caller that crashed AFTER the append committed but BEFORE its own
-    bookkeeping can blindly re-run. Sequential appends only (the token
-    remembers one batch). Concurrent WRITERS are refused by the
-    single-writer lease (public wrapper); probing DURING a rebuild
-    still reads data mid-replacement."""
-    spark = vectors.sparkSession
-    if mode == "append":
-        m = _read_ivf_meta(spark, path)
-        if m["status"] == "__building__":
-            raise ValueError(
-                "index is mid-rebuild (status '__building__') — rebuild "
-                "it with write_ivf_index(mode='overwrite')"
-            )
-        if append_token is not None and m["token"] == append_token:
-            return  # this batch's append already committed — a retry
-        if m["status"] == "__appending__":
-            # the documented same-append retry — a retry carrying a
-            # DIFFERENT token is a different batch, and letting it run
-            # would silently adopt (or interleave with) the dead
-            # attempt's data as its own
-            if (m["pending_token"] is not None and append_token is not None
-                    and m["pending_token"] != append_token):
+    partitions and silently return low-recall neighbors).
+    ``mode="append"`` grows the index with new vectors
+    (``centroids=None`` reuses the stored matrix, a supplied list must
+    match it exactly) and records the committed row count, so a
+    retried append after a crash detects whether the dead attempt's
+    data landed (parquet-footer count vs meta rows — the standard
+    job-commit atomicity assumption) and never double-appends.
+    Markers, append tokens and the single-writer lease follow
+    :mod:`._index_core`; probing DURING a rebuild still reads data
+    mid-replacement."""
+    with C.index_lease(path, f"ivf-{mode}"):
+        spark = vectors.sparkSession
+        if mode == "append":
+            m = _read_ivf_meta(spark, path)
+            if C.admit_append(_SPEC, path, m, append_token,
+                              " (compact_ivf_index recovers its own "
+                              "crashes)"):
+                return
+            if centroids is None:
+                centroids = m["centroids"]
+            elif [[float(x) for x in c] for c in centroids] != m["centroids"]:
                 raise ValueError(
-                    f"index at {path!r} has an in-flight append with "
-                    f"token {m['pending_token']!r}; refusing append "
-                    f"with token {append_token!r} — re-run the dead "
-                    "append to completion first (appends are sequential)"
+                    "append centroids do not match the index's stored "
+                    "centroid matrix — drifted centroids would assign new "
+                    "vectors to the wrong partitions; pass centroids=None "
+                    "to reuse the stored matrix, or rebuild"
                 )
-        elif m["status"] != "committed":
-            # '__compacting__': committing an append here would cancel
-            # the pending recovery, and the later finish-the-swap would
-            # discard this append's rows
-            raise ValueError(
-                f"index at {path!r} has status {m['status']!r} — finish "
-                "the in-flight maintenance first (compact_ivf_index "
-                "recovers its own crashes), then append"
-            )
-        if centroids is None:
-            centroids = m["centroids"]
-        elif [[float(x) for x in c] for c in centroids] != m["centroids"]:
-            raise ValueError(
-                "append centroids do not match the index's stored "
-                "centroid matrix — drifted centroids would assign new "
-                "vectors to the wrong partitions; pass centroids=None "
-                "to reuse the stored matrix, or rebuild"
-            )
-        versions, dir_ids = m["versions"], m["dir_ids"]
-        data_dir = _ivf_data_dir(path, m)
-        # live rows only: a crashed (never-committed) split may have
-        # left orphan centroid_id dirs the meta doesn't reference
-        actual = spark.read.parquet(data_dir).where(
-            F.col("centroid_id").isin(dir_ids)).count()
-        if m["status"] == "__appending__" and actual != m["rows"]:
-            # the dead append's data job committed but its meta didn't:
-            # the retry (token-verified above) must not double-append
-            _write_ivf_meta(spark, path, centroids, "committed", actual,
-                            append_token, versions=versions,
-                            dir_ids=dir_ids)
-            return
-        # the marker row still carries the PREVIOUS token: this batch's
-        # token only lands at commit; pending_token names THIS attempt
-        _write_ivf_meta(spark, path, centroids, "__appending__", actual,
-                        m["token"], append_token, versions=versions,
-                        dir_ids=dir_ids)
-    elif mode == "overwrite":
-        if centroids is None:
-            raise ValueError("mode='overwrite' requires a centroid matrix")
-        versions, dir_ids = {}, list(range(len(centroids)))
-        data_dir = f"{path}/data"
-        _write_ivf_meta(spark, path, centroids, "__building__", 0)
-    else:
-        raise ValueError(f"bad mode: {mode}")
-    to_dir = _dir_of_position(dir_ids)
-    assigned = vectors.select(
-        F.col(id_col),
-        as_double(F.col(vec_col)).alias(vec_col),
-        l2_norm(vec_col).alias("_nv"),
-        to_dir(_argmax_centroid(F.col(vec_col), centroids))
-        .alias("centroid_id"),
-    )
-    assigned.write.mode(mode).partitionBy("centroid_id").parquet(data_dir)
-    # committed row count via parquet footers only (metadata-count)
-    total = spark.read.parquet(data_dir).where(
-        F.col("centroid_id").isin(dir_ids)).count()
-    _write_ivf_meta(spark, path, centroids, "committed", total,
-                    append_token if mode == "append" else None,
-                    versions=versions, dir_ids=dir_ids)
-    if mode == "overwrite":
-        from .dedup import _gc_table_versions
+            # live rows only: a crashed (never-committed) split may have
+            # left orphan centroid_id dirs the meta doesn't reference
+            actual = spark.read.parquet(_ivf_data_dir(path, m)).where(
+                F.col("centroid_id").isin(m["dir_ids"])).count()
+            if m["status"] == "__appending__" and actual != m["rows"]:
+                # the dead append's data job committed but its meta
+                # didn't: the retry (token-verified above) must not
+                # double-append
+                C.commit(spark, path, _SPEC, m, rows=actual,
+                         token=append_token)
+                return
+            m = {**m, "rows": actual}
+        elif mode == "overwrite":
+            if centroids is None:
+                raise ValueError("mode='overwrite' requires a centroid matrix")
+            m = C.fresh_meta(centroids=centroids, rows=0,
+                             dir_ids=list(range(len(centroids))))
+        else:
+            raise ValueError(f"bad mode: {mode}")
 
-        _gc_table_versions(path, "data", 0)
+        def body(m: dict) -> dict:
+            data_dir = _ivf_data_dir(path, m)
+            to_dir = _dir_of_position(m["dir_ids"])
+            vectors.select(
+                F.col(id_col),
+                as_double(F.col(vec_col)).alias(vec_col),
+                l2_norm(vec_col).alias("_nv"),
+                to_dir(_argmax_centroid(F.col(vec_col), centroids))
+                .alias("centroid_id"),
+            ).write.mode(mode).partitionBy("centroid_id").parquet(data_dir)
+            # committed row count via parquet footers only (metadata-count)
+            return {"rows": spark.read.parquet(data_dir).where(
+                F.col("centroid_id").isin(m["dir_ids"])).count()}
+
+        C.write_cycle(spark, path, _SPEC, mode, append_token, m, body)
 
 
 # ------------------------------------- streaming face of the IVF index
 def _stream_ivf_sink(index_path: str, id_col: str = "vec_id",
                      vec_col: str = "embedding"):
     """The foreachBatch callable behind :func:`index_vectors_stream`,
-    factored out so replay idempotence is directly testable. Per
-    micro-batch: skip if the batch id is in ``{index_path}/batches``;
-    append with ``append_token=f"batch{batch_id}"`` (exactly-once even
-    when the append committed but this sink crashed before recording —
-    the token check inside :func:`write_ivf_index` turns the re-append
-    into a no-op); record the batch id LAST."""
-
-    from .dedup import _token_registry_sink
-
-    return _token_registry_sink(
+    factored out so replay idempotence is directly testable: the shared
+    :func:`._index_core.registry_sink` around a token-carrying append
+    (the token check inside :func:`write_ivf_index` turns the re-append
+    of a committed batch into a no-op)."""
+    return C.registry_sink(
         index_path,
-        lambda batch_df, token: write_ivf_index(
+        lambda batch_df, _batch_id, token: write_ivf_index(
             batch_df, None, index_path, id_col, vec_col,
             mode="append", append_token=token,
         ),
@@ -795,16 +711,9 @@ def index_vectors_stream(
     periodically to collapse the per-batch files. One streaming query
     per index (appends are sequential by design). Returns the started
     ``StreamingQuery``."""
-    sink = _stream_ivf_sink(index_path, id_col, vec_col)
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return C.start_stream(
+        df, _stream_ivf_sink(index_path, id_col, vec_col),
+        checkpoint_dir, trigger_available_now, query_name)
 
 
 def ivf_index_stats(spark: "SparkSession", path: str) -> dict:
@@ -813,214 +722,63 @@ def ivf_index_stats(spark: "SparkSession", path: str) -> dict:
     one count-vs-distinct job: meta status/dims, per-centroid-partition
     file counts (appends add one file per touched partition per batch —
     ``max_files_per_partition`` growth is what slows pruned probes),
-    and duplicate full rows (retry residue)."""
-    import collections
-    import os
-
-    import pyarrow.parquet as pq
-
-    from .dedup import _open_listed
-
+    partition ROW skew (appends against frozen centroids fatten hot
+    partitions — the :func:`split_ivf_centroid` / :func:`retrain_ivf_
+    index` trigger), and duplicate full rows (retry residue)."""
     m = _read_ivf_meta(spark, path)
-    out = {
-        "status": m["status"], "dim": m["dim"], "norm": m["norm"],
-        "rows": m["rows"], "n_centroids": len(m["centroids"]),
-    }
-    from .dedup import _list_parquet_files
-
-    per_part: collections.Counter = collections.Counter()
-    total_rows = 0
-    n_files = 0
     base = _ivf_data_dir(path, m)
-    live = {f"centroid_id={d}" for d in m["dir_ids"]}
-    files = _list_parquet_files(base, recursive=True)
-    part_rows: collections.Counter = collections.Counter()
-    orphan_dirs = set()
-    for fs_, fp in files:
-        d = os.path.dirname(fp)
-        part = d.rstrip("/").rsplit("/", 1)[-1]
-        if part not in live:
-            # residue of a crashed (never-committed) split — invisible
-            # to probes, collected by the next compact
-            orphan_dirs.add(part)
-            continue
-        n_files += 1
-        per_part[d] += 1
-        with _open_listed(fs_, fp) as fh:
-            nr = pq.ParquetFile(fh).metadata.num_rows
-        total_rows += nr
-        part_rows[d] += nr
+    scan = C.scan_footers(base, live={f"centroid_id={d}"
+                                      for d in m["dir_ids"]})
     df = spark.read.parquet(base).where(
         F.col("centroid_id").isin(m["dir_ids"]))
     dup = df.count() - df.distinct().count()
-    # ROW skew per centroid partition — the :func:`split_ivf_centroid`
-    # trigger: appends against frozen centroids fatten hot partitions,
-    # which degrades pruning (a probe of that centroid reads the whole
-    # fat bucket). footer-only, like the rest of this report.
-    max_pr = max(part_rows.values()) if part_rows else 0
-    mean_pr = (total_rows / len(part_rows)) if part_rows else 0.0
-    # maintenance advisory — the trigger guidance for the three
-    # remedies, cheapest first: many small files → compact; ONE fat
-    # partition → split that cid; MANY fat partitions (sustained
-    # drift) → retrain_ivf_index (split would chase them one at a
-    # time while the matrix no longer fits the data)
-    hot = [d for d, r in part_rows.items() if mean_pr and r > 2 * mean_pr]
-    if len(hot) > max(1, len(per_part) // 4):
-        hint = "retrain"
-    elif len(hot) == 1:
-        # split takes the MATRIX POSITION; map the physical dir back
-        # through the dir_ids indirection
-        phys = int(hot[0].rsplit("=", 1)[-1])
-        hint = f"split:{m['dir_ids'].index(phys)}"
-    elif per_part and max(per_part.values()) > 8:
-        hint = "compact"
-    else:
-        hint = None
-    out.update(
-        data_files=n_files,
-        populated_partitions=len(per_part),
-        max_files_per_partition=max(per_part.values()) if per_part else 0,
-        footer_rows=total_rows,
-        duplicate_rows=int(dup),
-        max_rows_per_partition=int(max_pr),
-        mean_rows_per_partition=round(mean_pr, 1),
-        partition_row_skew=round(max_pr / mean_pr, 2) if mean_pr else 0.0,
-        orphan_partitions=len(orphan_dirs),
-        hot_partitions=len(hot),
-        maintenance_hint=hint,
-    )
-    return out
+    max_files = max(scan.part_files.values()) if scan.part_files else 0
+    return {
+        "status": m["status"], "dim": m["dim"], "norm": m["norm"],
+        "rows": m["rows"], "n_centroids": len(m["centroids"]),
+        "data_files": scan.files,
+        "populated_partitions": len(scan.part_files),
+        "max_files_per_partition": max_files,
+        "footer_rows": scan.rows,
+        "duplicate_rows": int(dup),
+        "max_rows_per_partition": int(scan.max_part_rows),
+        "mean_rows_per_partition": round(scan.mean_part_rows, 1),
+        "partition_row_skew": scan.row_skew,
+        "orphan_partitions": len(scan.orphans),
+        "hot_partitions": len(scan.hot),
+        "maintenance_hint": C.maintenance_hint(
+            scan, max_files > 8, m["dir_ids"]),
+    }
 
 
-def _compact_ivf_index_unlocked(spark: "SparkSession", path: str) -> None:
+def compact_ivf_index(spark: "SparkSession", path: str) -> None:
     """Rewrite the IVF index's data into one (or few) files per centroid
     partition — the maintenance pass a daily-append index eventually
     needs: each ``mode="append"`` adds its own small files under every
     touched ``centroid_id=`` directory, so after months the probe's
     pruned listing still opens hundreds of tiny files per bucket.
     Compaction reads the stored data (vectors are never re-assigned —
-    the pinned centroids guarantee assignments are stable), drops
-    full-row duplicates — reading LIVE partitions only, so a crashed
-    split's orphan dirs are never resurrected — and writes the result
-    to the NEXT version dir (``data_v<N+1>``, :func:`dedup._vdir`);
-    the commit is ONE meta-row overwrite flipping the pointer. No
-    remove-then-move window: crash-safe on stores without atomic
-    rename, probes keep working THROUGHOUT, and the flip also retires
-    any orphan partitions (they stay behind in the old version dir,
-    which is garbage-collected whole). A pre-r10 index left mid-swap
-    (``'__compacting__'``) is finished with the legacy move-based
-    recovery. Concurrent writers are refused by the single-writer
-    lease (public wrapper)."""
-    from .dedup import _dir_exists, _gc_table_versions, _mv_dir, _rm_dir
+    the pinned centroids guarantee assignments are stable) and drops
+    full-row duplicates, reading LIVE partitions only, so a crashed
+    split's orphan dirs are never resurrected; the shared versioned
+    swap (:func:`._index_core.compact`) commits it and retires the
+    orphans with the old version dir. Runs under the single-writer
+    lease."""
 
-    m = _read_ivf_meta(spark, path)
+    def rewrite(m: dict, dirs: dict) -> None:
+        spark.read.parquet(_ivf_data_dir(path, m)).where(
+            F.col("centroid_id").isin(m["dir_ids"])).distinct() \
+            .repartition(len(m["centroids"]), F.col("centroid_id")) \
+            .write.mode("overwrite").partitionBy("centroid_id") \
+            .parquet(dirs["data"])
 
-    if m["status"] == "__compacting__":
-        # legacy (pre-r10) mid-swap recovery
-        data, comp = f"{path}/data", f"{path}/data_compact"
-        if _dir_exists(comp):
-            _rm_dir(data)
-            _mv_dir(comp, data)
-        rows = spark.read.parquet(data).count()
-        _write_ivf_meta(spark, path, m["centroids"], "committed", rows,
-                        m["token"])
-        return
-    if m["status"] != "committed":
-        raise ValueError(
-            f"index at {path!r} has status {m['status']!r} — finish the "
-            "in-flight rebuild/append first, then compact"
-        )
-    data = _ivf_data_dir(path, m)
-    new_v = m["versions"].get("data", 0) + 1
-    new_dir = _vdir_similarity(path, new_v)
-    df = spark.read.parquet(data).where(
-        F.col("centroid_id").isin(m["dir_ids"])).distinct()
-    n_cents = len(m["centroids"])
-    df.repartition(n_cents, F.col("centroid_id")) \
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(new_dir)
-    rows = spark.read.parquet(new_dir).count()
-    # THE commit: one meta overwrite flips the pointer (token preserved:
-    # compaction never consumes or produces a batch)
-    _write_ivf_meta(spark, path, m["centroids"], "committed", rows,
-                    m["token"], versions={**m["versions"], "data": new_v},
-                    dir_ids=m["dir_ids"])
-    _gc_table_versions(path, "data", new_v)
-
-
-def _vdir_similarity(path: str, version: int) -> str:
-    from .dedup import _vdir
-
-    return _vdir(path, "data", version)
-
-
-
-def write_ivf_index(
-    vectors: DataFrame,
-    centroids: Optional[Sequence[Sequence[float]]],
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    mode: str = "overwrite",
-    append_token: "Optional[str]" = None,
-) -> None:
-    """Public face of :func:`_write_ivf_index_unlocked` (see its
-    docstring for layout + crash discipline), under the index's
-    SINGLE-WRITER lease: a concurrent rebuild/append/compaction is
-    refused loudly instead of interleaving meta overwrites; a dead
-    writer's stale lease is taken over after its ttl."""
-    from .dedup import acquire_index_lease, release_index_lease
-
-    lt = acquire_index_lease(path, f"ivf-{mode}")
-    try:
-        _write_ivf_index_unlocked(
-            vectors, centroids, path, id_col, vec_col, mode, append_token
-        )
-    finally:
-        release_index_lease(path, lt)
-
-
-def compact_ivf_index(spark: "SparkSession", path: str) -> None:
-    """Public face of :func:`_compact_ivf_index_unlocked`, under the
-    single-writer lease (see :func:`write_ivf_index`)."""
-    from .dedup import acquire_index_lease, release_index_lease
-
-    lt = acquire_index_lease(path, "ivf-compact")
-    try:
-        _compact_ivf_index_unlocked(spark, path)
-    finally:
-        release_index_lease(path, lt)
+    with C.index_lease(path, "ivf-compact"):
+        C.compact(spark, path, _SPEC, rewrite,
+                  pending="in-flight rebuild/append first")
 
 
 # --------------------------------------- hot-centroid split maintenance
-def _finish_split(spark: "SparkSession", path: str, m: dict) -> None:
-    """LEGACY recovery only (pre-r10 ``'__splitting__'`` indexes): move
-    every prepared ``data_split/centroid_id=*`` directory into
-    ``data/``, replacing the split partition's old directory, then
-    commit the NEW matrix. Idempotent — the old
-    ``centroid_id=<split_cid>`` dir is removed only while its
-    replacement is still pending in data_split. New splits never enter
-    this state (fresh-dir-id allocation + one meta flip)."""
-    from .dedup import _dir_exists, _list_split_dirs, _mv_dir, _rm_dir
-
-    data, split = f"{path}/data", f"{path}/data_split"
-    cid = m["split_cid"]
-    cid_pending = f"{split}/centroid_id={cid}"
-    if _dir_exists(cid_pending):
-        # remove the OLD fat partition only while its replacement still
-        # waits in data_split — after the move, a re-run must NOT
-        # delete the new data
-        _rm_dir(f"{data}/centroid_id={cid}")
-        _mv_dir(cid_pending, f"{data}/centroid_id={cid}")
-    for name in _list_split_dirs(split):
-        _rm_dir(f"{data}/{name}")  # a crashed previous move's residue
-        _mv_dir(f"{split}/{name}", f"{data}/{name}")
-    _rm_dir(split)
-    rows = spark.read.parquet(data).count()
-    _write_ivf_meta(spark, path, m["centroids"], "committed", rows,
-                    m["token"])
-
-
-def _split_ivf_centroid_unlocked(
+def split_ivf_centroid(
     spark: "SparkSession",
     path: str,
     cid: int,
@@ -1031,193 +789,18 @@ def _split_ivf_centroid_unlocked(
 ) -> "list[list[float]]":
     """Split ONE hot IVF partition into ``k_sub`` sub-centroids — the
     maintenance pass a growing index eventually needs
-    (`ivf_index_stats`'s ``partition_row_skew`` / ``max_rows_per_
+    (:func:`ivf_index_stats`'s ``partition_row_skew`` / ``max_rows_per_
     partition`` are the trigger): months of ``mode="append"`` against
     frozen centroids fatten the partitions drifting data lands in, so a
     probe of a hot centroid reads an ever-bigger bucket and recall per
-    scanned byte decays. The only remedy used to be a full rebuild.
-
-    Mechanics: the split partition's vectors are read (one
-    partition-pruned scan), ``k_sub`` sub-centroids are Lloyd-trained
-    on them (deterministic: lowest-id seeds, fixed ``iters``, 9dp
-    means), and the members are re-assigned AMONG THE SUB-CENTROIDS
-    ONLY — every other partition's data and assignment is untouched, so
-    the swap replaces exactly one directory and adds ``k_sub - 1`` new
-    ones. The new matrix keeps every old row id (sub-centroid 0 takes
-    the split id, the rest append at ids ``n..n+k_sub-2``), so existing
-    probes keep pruning correctly and the PIN stays intact: a caller
-    still holding the pre-split list is refused loudly.
-
-    Crash discipline (r10): the sub-partitions are written under FRESH
-    physical ``centroid_id`` values that no committed meta row names —
-    invisible to every probe — and the commit is ONE meta-row overwrite
-    installing the new matrix and the new ``dir_ids`` indirection. No
-    remove-then-move, no ``'__splitting__'`` intermediate state, no
-    atomic-rename assumption: a crash before the flip leaves the index
-    bit-for-bit committed (the fresh dirs are dead by construction and
-    a retry overwrites them — training is deterministic, so the retry
-    targets the same ids); a crash after it leaves only the old fat
-    partition as garbage for the flip-side GC or the next compaction.
-    A pre-r10 index left mid-split (``'__splitting__'``) is finished
-    with the legacy move-based recovery. Returns the new centroid
-    matrix."""
-    m = _read_ivf_meta(spark, path)
-    if m["status"] == "__splitting__":
-        # legacy (pre-r10) mid-split recovery
-        if m["split_cid"] != cid:
-            raise ValueError(
-                f"index at {path!r} is mid-split of centroid "
-                f"{m['split_cid']} — re-run split_ivf_centroid with "
-                f"that cid to finish it (got cid={cid})"
-            )
-        _finish_split(spark, path, m)
-        return m["centroids"]
-    if m["status"] != "committed":
-        raise ValueError(
-            f"index at {path!r} has status {m['status']!r} — finish the "
-            "in-flight operation first, then split"
-        )
-    n = len(m["centroids"])
-    if not (0 <= cid < n):
-        raise ValueError(f"cid {cid} out of range for {n} centroids")
-    if k_sub < 2:
-        raise ValueError("k_sub must be at least 2")
-    data_dir = _ivf_data_dir(path, m)
-    dir_ids = m["dir_ids"]
-    old_dir = dir_ids[cid]
-    part = spark.read.parquet(data_dir).where(
-        F.col("centroid_id") == old_dir)
-    n_part = part.count()
-    if n_part < k_sub:
-        raise ValueError(
-            f"partition {cid} holds {n_part} vectors — cannot split "
-            f"into {k_sub} sub-centroids"
-        )
-    # deterministic local training: lowest-id seeds, Lloyd `iters`
-    sub = kmeans_centroids(part, k_sub, iters=iters, id_col=id_col,
-                           vec_col=vec_col)
-    new_cents = [list(c) for c in m["centroids"]]
-    new_cents[cid] = list(sub[0])
-    new_cents.extend(list(c) for c in sub[1:])
-    # FRESH physical partition ids (deterministic: max+1..): invisible
-    # until the meta flip names them in dir_ids
-    fresh = max(dir_ids) + 1
-    new_dirs = list(range(fresh, fresh + k_sub))
-    new_dir_ids = list(dir_ids)
-    new_dir_ids[cid] = new_dirs[0]
-    new_dir_ids.extend(new_dirs[1:])
-    # re-assign the members among the SUB-centroids only (local argmax,
-    # then map local j -> fresh dir); other partitions never move
-    local = _argmax_centroid(F.col(vec_col), sub)
-    gid = F.when(local == 0, F.lit(new_dirs[0]))
-    for j in range(1, k_sub):
-        gid = gid.when(local == j, F.lit(new_dirs[j]))
-    reassigned = part.select(
-        F.col(id_col), F.col(vec_col), F.col("_nv"),
-        gid.cast("int").alias("centroid_id"),
-    )
-    # dynamic partition overwrite: ONE job replaces exactly the touched
-    # (fresh) partition dirs — a crashed attempt's residue included —
-    # and never touches any live partition. An empty sub-centroid
-    # (Lloyd can empty a cluster) simply writes no dir: the probe's
-    # partition filter finds no rows, which is the right answer.
-    reassigned.write.mode("overwrite") \
-        .option("partitionOverwriteMode", "dynamic") \
-        .partitionBy("centroid_id").parquet(data_dir)
-    # THE commit: one meta overwrite installs matrix + indirection
-    # (token preserved — a split never consumes or produces a batch)
-    _write_ivf_meta(spark, path, new_cents, "committed", m["rows"],
-                    m["token"], versions=m["versions"],
-                    dir_ids=new_dir_ids)
-    # the old fat partition is now orphaned — best-effort GC (the next
-    # compaction retires it regardless)
-    from .dedup import _rm_dir
-
-    try:
-        _rm_dir(f"{data_dir}/centroid_id={old_dir}")
-    except Exception:
-        pass
-    return new_cents
-
-
-def split_ivf_centroid(
-    spark: "SparkSession",
-    path: str,
-    cid: int,
-    k_sub: int,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> "list[list[float]]":
-    """Public face of :func:`_split_ivf_centroid_unlocked`, under the
-    single-writer lease (see :func:`write_ivf_index`)."""
-    from .dedup import acquire_index_lease, release_index_lease
-
-    lt = acquire_index_lease(path, "ivf-split")
-    try:
-        return _split_ivf_centroid_unlocked(
-            spark, path, cid, k_sub, iters, id_col, vec_col)
-    finally:
-        release_index_lease(path, lt)
-
-
-def _retrain_ivf_index_unlocked(
-    spark: "SparkSession",
-    path: str,
-    k: "Optional[int]" = None,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> "list[list[float]]":
-    """GLOBAL retrain for a drifted IVF index (r10, VERDICT missing
-    #4): months of appends against frozen centroids degrade MANY
-    partitions at once — :func:`split_ivf_centroid` heals one hot
-    partition, but when ``ivf_index_stats``'s ``partition_row_skew``
-    stays high across splits, the matrix itself no longer fits the
-    data and the only full remedy is re-training. This re-runs Lloyd
-    over the STORED vectors — seeded from the current centroids, so a
-    healthy index converges in place — re-assigns every row, and
-    rewrites the data table into the NEXT version dir; the commit is
-    the same single meta-pointer flip as compaction (new matrix,
-    identity ``dir_ids``, bumped version), so a crash anywhere leaves
-    the old index fully live and probes work THROUGHOUT. The append
-    token survives (retrain consumes no batch); callers holding the
-    pre-retrain matrix are refused by the pin, exactly as after a
-    split. ``k`` defaults to the current centroid count (pass more to
-    grow capacity with the corpus). Returns the new matrix."""
-    m = _read_ivf_meta(spark, path)
-    if m["status"] != "committed":
-        raise ValueError(
-            f"index at {path!r} has status {m['status']!r} — finish the "
-            "in-flight operation first, then retrain"
-        )
-    data = _ivf_data_dir(path, m)
-    live = spark.read.parquet(data).where(
-        F.col("centroid_id").isin(m["dir_ids"]))
-    k = k if k is not None else len(m["centroids"])
-    seed = (m["centroids"] if k == len(m["centroids"])
-            else None)  # a changed k starts from lowest-id seeds
-    new_cents = kmeans_centroids(
-        live, k, iters=iters, id_col=id_col, vec_col=vec_col,
-        seed_centroids=seed)
-    new_v = m["versions"].get("data", 0) + 1
-    new_dir = _vdir_similarity(path, new_v)
-    live.select(
-        F.col(id_col), F.col(vec_col), F.col("_nv"),
-        _argmax_centroid(F.col(vec_col), new_cents).alias("centroid_id"),
-    ).repartition(len(new_cents), F.col("centroid_id")) \
-        .write.mode("overwrite").partitionBy("centroid_id") \
-        .parquet(new_dir)
-    rows = spark.read.parquet(new_dir).count()
-    # THE commit: matrix + identity indirection + version, in one flip
-    _write_ivf_meta(spark, path, new_cents, "committed", rows,
-                    m["token"],
-                    versions={**m["versions"], "data": new_v},
-                    dir_ids=list(range(len(new_cents))))
-    from .dedup import _gc_table_versions
-
-    _gc_table_versions(path, "data", new_v)
-    return new_cents
+    scanned byte decays. Every other partition's data and assignment
+    is untouched; existing probes keep pruning correctly and a caller
+    still holding the pre-split matrix is refused loudly. Mechanics and
+    crash discipline: :func:`._index_core.split_centroid`. Runs under
+    the single-writer lease. Returns the new centroid matrix."""
+    with C.index_lease(path, "ivf-split"):
+        return C.split_centroid(spark, path, _SPEC, cid, k_sub, iters,
+                                id_col, vec_col, vectors="data")
 
 
 def retrain_ivf_index(
@@ -1228,16 +811,20 @@ def retrain_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> "list[list[float]]":
-    """Public face of :func:`_retrain_ivf_index_unlocked`, under the
-    single-writer lease (see :func:`write_ivf_index`)."""
-    from .dedup import acquire_index_lease, release_index_lease
-
-    lt = acquire_index_lease(path, "ivf-retrain")
-    try:
-        return _retrain_ivf_index_unlocked(
-            spark, path, k, iters, id_col, vec_col)
-    finally:
-        release_index_lease(path, lt)
+    """GLOBAL retrain for a drifted IVF index: months of appends against
+    frozen centroids degrade MANY partitions at once —
+    :func:`split_ivf_centroid` heals one hot partition, but when
+    ``ivf_index_stats``'s ``partition_row_skew`` stays high across
+    splits, the matrix itself no longer fits the data. This re-runs
+    Lloyd over the STORED vectors and re-assigns every row
+    (:func:`._index_core.retrain`); probes work throughout, and callers
+    holding the pre-retrain matrix are refused by the pin, exactly as
+    after a split. ``k`` defaults to the current centroid count (pass
+    more to grow capacity with the corpus). Runs under the
+    single-writer lease. Returns the new matrix."""
+    with C.index_lease(path, "ivf-retrain"):
+        return C.retrain(spark, path, _SPEC, k, iters, id_col, vec_col,
+                         vectors="data")
 
 
 def knn_ivf_indexed(
@@ -1279,12 +866,7 @@ def knn_ivf_indexed(
     so AQE sizes the join (a 100k-query × d-float fleet should not be
     forced onto the driver)."""
     m = _read_ivf_meta(spark, path)
-    if m["status"] != "committed":
-        raise ValueError(
-            f"IVF index at {path!r} has status {m['status']!r} — a "
-            "rebuild or append died part-way; re-run it to completion, "
-            "then probe"
-        )
+    C.check_probe(_SPEC, path, m)
     if centroids is not None and (
         [[float(x) for x in c] for c in centroids] != m["centroids"]
     ):
@@ -1296,21 +878,7 @@ def knn_ivf_indexed(
         )
     centroids = m["centroids"]
     dim = len(centroids[0])
-    cmat = _matrix_lit(_normalize_rows(centroids))
     nprobe = min(nprobe, len(centroids))
-
-    def probes(q: Column) -> Column:
-        scored = F.transform(
-            cmat,
-            lambda c, i: F.struct(
-                dot(q, c).alias("sim"),
-                (-i).cast("int").alias("ncid"),
-                i.cast("int").alias("cid"),
-            ),
-        )
-        return F.transform(
-            F.slice(F.reverse(F.array_sort(scored)), 1, nprobe), lambda s: s["cid"]
-        )
 
     # positions → PHYSICAL partition ids via the meta row's dir_ids
     # indirection (identity on a never-split index)
@@ -1320,16 +888,15 @@ def knn_ivf_indexed(
         F.col(query_vec_col),
         l2_norm(query_vec_col, dim).alias("_nq"),
         F.transform(
-            _let(as_double(F.col(query_vec_col)), probes),
+            _let(as_double(F.col(query_vec_col)),
+                 lambda q: _probe_positions(q, centroids, nprobe)),
             lambda p: to_dir(p),
         ).alias("probe_cids"),
     )
-    from .dedup import _PUSHDOWN_MIN_INDEX_BYTES, _dir_bytes_at_least
-
     if prune_min_index_bytes is None:
-        prune_min_index_bytes = _PUSHDOWN_MIN_INDEX_BYTES
+        prune_min_index_bytes = C._PUSHDOWN_MIN_INDEX_BYTES
     data_dir = _ivf_data_dir(path, m)
-    if probe_join == "auto" and not _dir_bytes_at_least(
+    if probe_join == "auto" and not C._dir_bytes_at_least(
         data_dir, prune_min_index_bytes
     ):
         # SCALE-ADAPTIVE (r11): below one scan task's worth of index the
@@ -1337,39 +904,47 @@ def knn_ivf_indexed(
         # extra action per probe — run the whole probe as ONE action on
         # the small-fleet broadcast join (results identical; at corpus
         # scale the prune engages exactly as below)
-        index = spark.read.parquet(data_dir)
-        cond = F.array_contains(F.col("probe_cids"), F.col("centroid_id"))
-        if exclude_self:
-            cond = cond & (F.col(id_col) != F.col(query_id_col))
-        cand = index.join(F.broadcast(probe_sets), cond)
-        return _score_ivf_cand(
-            cand, k, id_col, vec_col, query_id_col, query_vec_col, dim)
-    # bounded driver state: |queries| × nprobe ints — the scan filter
-    probe_rows = probe_sets.select("probe_cids").collect()
-    probed = sorted({int(c) for r in probe_rows for c in r[0]})
-    index = spark.read.parquet(data_dir).where(
-        F.col("centroid_id").isin(probed))
-    if probe_join not in ("auto", "broadcast", "equi"):
-        raise ValueError(f"bad probe_join: {probe_join}")
-    use_equi = probe_join == "equi" or (
-        probe_join == "auto" and len(probe_rows) >= _EQUIJOIN_FLEET)
-    if use_equi:
-        exploded = probe_sets.select(
-            query_id_col, query_vec_col, "_nq",
-            F.explode("probe_cids").alias("centroid_id"),
-        )
-        if len(probe_rows) < _BROADCAST_FLEET_CAP:
-            exploded = F.broadcast(exploded)
-        cand = index.join(exploded, "centroid_id")
-        if exclude_self:
-            cand = cand.where(F.col(id_col) != F.col(query_id_col))
+        index, use_equi, n_queries = spark.read.parquet(data_dir), False, 0
     else:
-        cond = F.array_contains(F.col("probe_cids"), F.col("centroid_id"))
-        if exclude_self:
-            cond = cond & (F.col(id_col) != F.col(query_id_col))
-        cand = index.join(F.broadcast(probe_sets), cond)
+        # bounded driver state: |queries| × nprobe ints — the scan filter
+        probe_rows = probe_sets.select("probe_cids").collect()
+        probed = sorted({int(c) for r in probe_rows for c in r[0]})
+        index = spark.read.parquet(data_dir).where(
+            F.col("centroid_id").isin(probed))
+        if probe_join not in ("auto", "broadcast", "equi"):
+            raise ValueError(f"bad probe_join: {probe_join}")
+        n_queries = len(probe_rows)
+        use_equi = probe_join == "equi" or (
+            probe_join == "auto" and n_queries >= _EQUIJOIN_FLEET)
+    cand = _probe_candidates(
+        index, probe_sets, "probe_cids", (query_id_col, query_vec_col, "_nq"),
+        use_equi, n_queries, exclude_self, id_col, query_id_col)
     return _score_ivf_cand(
         cand, k, id_col, vec_col, query_id_col, query_vec_col, dim)
+
+
+def _probe_candidates(
+    scan: DataFrame, probe_sets: DataFrame, cids_col: str,
+    query_cols: "Sequence[str]", equi: bool, n_queries: int,
+    exclude_self: bool, id_col: str, query_id_col: str,
+) -> DataFrame:
+    """Join an index scan to the queries probing each row's
+    ``centroid_id`` (``cids_col``): the equi or nested-loop broadcast
+    shape of :func:`knn_ivf_indexed`'s ``probe_join``, shared with
+    :func:`ivfpq_index.knn_ivfpq_indexed`."""
+    if equi:
+        exploded = probe_sets.select(
+            *query_cols, F.explode(cids_col).alias("centroid_id"))
+        if n_queries < _BROADCAST_FLEET_CAP:
+            exploded = F.broadcast(exploded)
+        cand = scan.join(exploded, "centroid_id")
+        if exclude_self:
+            cand = cand.where(F.col(id_col) != F.col(query_id_col))
+        return cand
+    cond = F.array_contains(F.col(cids_col), F.col("centroid_id"))
+    if exclude_self:
+        cond = cond & (F.col(id_col) != F.col(query_id_col))
+    return scan.join(F.broadcast(probe_sets), cond)
 
 
 def _score_ivf_cand(
@@ -1377,7 +952,8 @@ def _score_ivf_cand(
     query_id_col: str, query_vec_col: str, dim: int,
 ) -> DataFrame:
     """Exact-cosine scoring + per-query top-k over an IVF candidate
-    join — the shared tail of every :func:`knn_ivf_indexed` join shape."""
+    join — the shared tail of :func:`knn_ivf` and every
+    :func:`knn_ivf_indexed` join shape."""
     denom = F.col("_nv") * F.col("_nq")
     scored = cand.select(
         F.col(query_id_col),
@@ -1798,22 +1374,7 @@ def knn_pq(
     joined = big.join(F.broadcast(small))
     if exclude_self:
         joined = joined.where(F.col(id_col) != F.col(query_id_col))
-    denom = F.col("_nv") * F.col("_nq")
-    scored = joined.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.when(denom > 0, dot_fast("_rv", "_qv") / denom)
-        .otherwise(F.lit(0.0))
-        .alias("approx_cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("approx_cosine"), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, "approx_cosine")
-    )
+    return _score_pq_cand(joined, k, id_col, query_id_col)
 
 
 def knn_ivfpq(
@@ -1856,33 +1417,27 @@ def knn_ivfpq(
         F.col(id_col), F.col("_cid"), F.col("_rv"), l2_norm("_rv").alias("_nv")
     )
 
-    cmat = _matrix_lit(_normalize_rows(centroids))
     nprobe = min(nprobe, len(centroids))
-
-    def probes(q: Column) -> Column:
-        # same tie discipline as knn_ivf: sim desc, ties -> LOWEST cid
-        scored = F.transform(
-            cmat,
-            lambda c, i: F.struct(
-                dot(q, c).alias("sim"),
-                (-i).cast("int").alias("ncid"),
-                i.cast("int").alias("cid"),
-            ),
-        )
-        return F.transform(
-            F.slice(F.reverse(F.array_sort(scored)), 1, nprobe), lambda s: s["cid"]
-        )
-
     small = queries.select(
         F.col(query_id_col),
         as_double(F.col(query_vec_col)).alias("_qv"),
         l2_norm(query_vec_col).alias("_nq"),
-        _let(as_double(F.col(query_vec_col)), probes).alias("_probe_cids"),
+        _let(as_double(F.col(query_vec_col)),
+             lambda q: _probe_positions(q, centroids, nprobe))
+        .alias("_probe_cids"),
     )
     cond = F.array_contains(F.col("_probe_cids"), F.col("_cid"))
     if exclude_self:
         cond = cond & (F.col(id_col) != F.col(query_id_col))
     cand = big.join(F.broadcast(small), cond)
+    return _score_pq_cand(cand, k, id_col, query_id_col)
+
+
+def _score_pq_cand(cand: DataFrame, k: int, id_col: str,
+                   query_id_col: str) -> DataFrame:
+    """Asymmetric scoring — dot(exact query, PQ reconstruction) — and
+    per-query top-k: the shared tail of :func:`knn_pq` and
+    :func:`knn_ivfpq`."""
     denom = F.col("_nv") * F.col("_nq")
     scored = cand.select(
         F.col(query_id_col),

@@ -13,8 +13,7 @@ postings, not the corpus:
   (``n_buckets``, the doc-id column name) and the corpus statistics
   BM25 needs (total docs ``n_docs``, tokenized docs ``n_docs_tok``,
   total token count ``sum_dl`` — so probes get N and avgdl without any
-  corpus scan), plus the status marker and last/pending append tokens
-  (the exactly-once machinery of the IVF / IVF-PQ / MinHash indexes).
+  corpus scan), plus the status marker and last/pending append tokens.
 * ``{path}/postings`` — (term, <id>, tf, dl) partitioned by
   ``bucket = pmod(xxhash64(term), n_buckets)`` and range-sorted by
   (term, id) within partitions. ``dl`` (document length) is
@@ -34,14 +33,10 @@ split — :func:`avro_spark.functions.text.ws_tokens`) so oracles can
 replicate it verbatim. Doc ids keep their NATIVE type end-to-end
 (string/UUID ids work — the r8-verdict id-contract lesson).
 
-Crash discipline mirrors the IVF-PQ index: ``'__appending__'`` marker
-first with a ``pending_token``, commit last with the batch token;
-recovery is re-running the SAME append (probes absorb the retry's
-duplicate rows via (term, id) dropDuplicates and the meta counters are
-incremented only once, at commit); a blind retry of a COMMITTED batch
-no-ops on the token; a DIFFERENT batch against a dead append is
-refused loudly; appends against ``'__compacting__'`` are refused.
-All mutating entry points run under the single-writer lease.
+Crash discipline and concurrency are the persisted indexes' shared
+contract (:mod:`._index_core`); probes absorb a retried append's
+duplicate rows via (term, id) dropDuplicates, and the meta counters
+land once, at commit.
 
 The corpus is APPEND-ONLY by doc id: re-appending an id that is
 already indexed double-counts it (same contract as the MinHash/IVF
@@ -56,7 +51,21 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import _index_core as C
 from .text import ws_tokens
+
+_SPEC = C.IndexSpec(
+    name="text", label="text index", tables=("postings", "termstats"),
+    fields=lambda d: {"n_buckets": d["n_buckets"], "id_col": d["id_col"],
+                      "n_docs": d["n_docs"], "n_docs_tok": d["n_docs_tok"],
+                      "sum_dl": d["sum_dl"]},
+    put=lambda spark, path, m: _write_text_meta(
+        spark, path, m["n_buckets"], m["id_col"], m["status"],
+        m["n_docs"], m["n_docs_tok"], m["sum_dl"], m["token"],
+        m["pending_token"], m["versions"]),
+    missing=("no text index meta at {path!r}/meta — not a "
+             "write_text_index index; rebuild it with write_text_index"),
+)
 
 
 def _bucket_expr(term: "F.Column", n_buckets: int) -> "F.Column":
@@ -79,15 +88,9 @@ def _write_text_meta(
     pending_token: "Optional[str]" = None,
     versions: "Optional[dict]" = None,
 ) -> None:
-    """The index's ONE meta row (layout pins + BM25 corpus statistics +
-    marker discipline + the table-version pointers whose overwrite IS a
-    compaction's atomic commit). Local paths commit driver-side
-    (:mod:`._meta_io`, no Spark job); otherwise pure JVM — no
-    Python-worker job."""
-    from ._meta_io import try_write_meta_row
-    from .dedup import _versions_json
-
-    if try_write_meta_row(f"{path}/meta", [
+    """The index's ONE meta row: layout pins + BM25 corpus statistics
+    + the shared status / token / version-pointer columns."""
+    C.write_meta_row(spark, path, [
         ("n_buckets", "int", int(n_buckets)),
         ("id_col", "string", id_col),
         ("status", "string", status),
@@ -96,60 +99,15 @@ def _write_text_meta(
         ("sum_dl", "long", int(sum_dl)),
         ("token", "string", token),
         ("pending_token", "string", pending_token),
-        ("versions", "string", _versions_json(versions)),
-    ]):
-        return
-    spark.range(1).select(
-        F.lit(int(n_buckets)).cast("int").alias("n_buckets"),
-        F.lit(id_col).alias("id_col"),
-        F.lit(status).alias("status"),
-        F.lit(int(n_docs)).cast("long").alias("n_docs"),
-        F.lit(int(n_docs_tok)).cast("long").alias("n_docs_tok"),
-        F.lit(int(sum_dl)).cast("long").alias("sum_dl"),
-        F.lit(token).cast("string").alias("token"),
-        F.lit(pending_token).cast("string").alias("pending_token"),
-        F.lit(_versions_json(versions)).cast("string").alias("versions"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+        ("versions", "string", C._versions_json(versions)),
+    ])
 
 
 def _read_text_meta(spark, path: str) -> dict:
-    from ._meta_io import try_read_meta_row
-
-    d = try_read_meta_row(f"{path}/meta")
-    if d is None:
-        try:
-            row = spark.read.parquet(f"{path}/meta").head()
-        except Exception as e:  # AnalysisException: no meta dir at all
-            raise ValueError(
-                f"no text index meta at {path!r}/meta — not a "
-                "write_text_index index; rebuild it with write_text_index"
-            ) from e
-        d = row.asDict() if row is not None else {}
-    if not d:
-        raise ValueError(
-            "text index meta is empty — the index is mid-rebuild or "
-            "corrupt; rebuild it with write_text_index"
-        )
-    from .dedup import _versions_of
-    return {
-        "n_buckets": d["n_buckets"], "id_col": d["id_col"],
-        "status": d["status"], "n_docs": d["n_docs"],
-        "n_docs_tok": d["n_docs_tok"], "sum_dl": d["sum_dl"],
-        "token": d.get("token"),
-        "pending_token": d.get("pending_token"),
-        "versions": _versions_of(d),
-    }
+    return C.read_meta(spark, path, _SPEC)
 
 
-def _tdir(path: str, versions: dict, table: str) -> str:
-    """Current physical dir of ``table`` (``postings``/``termstats``)
-    per the meta row's version pointers (:func:`dedup._vdir`)."""
-    from .dedup import _vdir
-
-    return _vdir(path, table, versions.get(table, 0))
-
-
-def _write_text_index_unlocked(
+def write_text_index(
     docs: DataFrame,
     path: str,
     id_col: str = "doc_id",
@@ -165,72 +123,54 @@ def _write_text_index_unlocked(
     don't match the pinned ones are refused loudly — drifted bucketing
     would route a term's new postings to a partition probes never
     scan, a silent-recall-loss bug). ``append_token`` gives
-    exactly-once blind retries, as in the sibling indexes."""
-    spark = docs.sparkSession
-    prev = {"n_docs": 0, "n_docs_tok": 0, "sum_dl": 0}
-    prev_token = None
-    versions: dict = {}
-    if mode == "append":
-        m = _read_text_meta(spark, path)
-        if m["status"] == "__building__":
-            raise ValueError(
-                "index is mid-rebuild (status '__building__') — rebuild "
-                "it with write_text_index(mode='overwrite')"
-            )
-        if append_token is not None and m["token"] == append_token:
-            return  # this batch's append already committed — a retry
-        if m["status"] == "__appending__":
-            if (m["pending_token"] is not None and append_token is not None
-                    and m["pending_token"] != append_token):
+    exactly-once blind retries; markers, tokens and the single-writer
+    lease follow :mod:`._index_core`."""
+    with C.index_lease(path, f"text-{mode}"):
+        spark = docs.sparkSession
+        if mode == "append":
+            m = _read_text_meta(spark, path)
+            if C.admit_append(_SPEC, path, m, append_token):
+                return
+            if n_buckets not in (None, m["n_buckets"]):
                 raise ValueError(
-                    f"index at {path!r} has an in-flight append with "
-                    f"token {m['pending_token']!r}; refusing append "
-                    f"with token {append_token!r} — re-run the dead "
-                    "append to completion first (appends are sequential)"
+                    f"append n_buckets={n_buckets} does not match the "
+                    f"index's pinned bucket count {m['n_buckets']} — "
+                    "drifted bucketing would hide new postings from "
+                    "probes; pass n_buckets=None"
                 )
-        elif m["status"] != "committed":
-            raise ValueError(
-                f"index at {path!r} has status {m['status']!r} — finish "
-                "the in-flight maintenance first, then append"
-            )
-        if n_buckets not in (None, m["n_buckets"]):
-            raise ValueError(
-                f"append n_buckets={n_buckets} does not match the "
-                f"index's pinned bucket count {m['n_buckets']} — "
-                "drifted bucketing would hide new postings from "
-                "probes; pass n_buckets=None"
-            )
-        if id_col != m["id_col"]:
-            raise ValueError(
-                f"append id_col={id_col!r} does not match the index's "
-                f"pinned id column {m['id_col']!r}"
-            )
-        n_buckets = m["n_buckets"]
-        prev = m
-        prev_token = m["token"]
-        versions = m["versions"]
-        # in-flight marker FIRST (previous committed counters + token,
-        # plus this attempt's pending_token), commit LAST — a crash
-        # mid-append fails probes loudly; recovery is re-running the
-        # SAME append (probes absorb duplicate rows, counters land once)
-        _write_text_meta(spark, path, n_buckets, id_col, "__appending__",
-                         m["n_docs"], m["n_docs_tok"], m["sum_dl"],
-                         prev_token, append_token, versions)
-    elif mode == "overwrite":
-        if not n_buckets or n_buckets < 1:
-            raise ValueError("n_buckets must be a positive int")
-        _write_text_meta(spark, path, n_buckets, id_col, "__building__",
-                         0, 0, 0)
-    else:
-        raise ValueError(f"bad mode: {mode}")
-    # ONE tokenize pass feeds both the statistics aggregate and the
-    # postings write (persist, as the IVF-PQ encoder does)
+            if id_col != m["id_col"]:
+                raise ValueError(
+                    f"append id_col={id_col!r} does not match the index's "
+                    f"pinned id column {m['id_col']!r}"
+                )
+            n_buckets = m["n_buckets"]
+        elif mode == "overwrite":
+            if not n_buckets or n_buckets < 1:
+                raise ValueError("n_buckets must be a positive int")
+            m = C.fresh_meta(n_buckets=n_buckets, id_col=id_col, n_docs=0,
+                             n_docs_tok=0, sum_dl=0)
+        else:
+            raise ValueError(f"bad mode: {mode}")
+        C.write_cycle(
+            spark, path, _SPEC, mode, append_token, m,
+            lambda m: _write_postings(docs, path, m, id_col, text_col,
+                                      mode, append_token))
+
+
+def _write_postings(docs: DataFrame, path: str, m: dict, id_col: str,
+                    text_col: str, mode: str,
+                    append_token: "Optional[str]") -> dict:
+    """The build/append payload: postings + termstats tables. Returns
+    the meta counters after this write."""
     from .dedup import _native_id
 
-    # NULL TEXT is fine (tokenizes to the empty array, like blank
-    # text); NULL IDS are not — they would merge under dropDuplicates
-    # and mislabel results, so they raise row-locally (the family's
-    # checked id contract)
+    n_buckets = m["n_buckets"]
+    # ONE tokenize pass feeds both the statistics aggregate and the
+    # postings write (persist, as the IVF-PQ encoder does). NULL TEXT
+    # is fine (tokenizes to the empty array, like blank text); NULL IDS
+    # are not — they would merge under dropDuplicates and mislabel
+    # results, so they raise row-locally (the family's checked id
+    # contract)
     base = docs.select(
         _native_id(id_col).alias(id_col),
         ws_tokens(F.lower(F.col(text_col))).alias("_t"),
@@ -253,8 +193,8 @@ def _write_text_index_unlocked(
             .agg(F.count("*").cast("long").alias("tf"))
             .withColumn("bucket", _bucket_expr(F.col("term"), n_buckets))
         )
-        post_dir = _tdir(path, versions, "postings")
-        ts_dir = _tdir(path, versions, "termstats")
+        post_dir = C.table_dir(path, m, "postings")
+        ts_dir = C.table_dir(path, m, "termstats")
         rows = post.select("term", id_col, "tf", "dl", "bucket")
         rows.repartition(n_buckets, "bucket") \
             .sortWithinPartitions("bucket", "term", id_col) \
@@ -297,40 +237,7 @@ def _write_text_index_unlocked(
                 .parquet(f"{ts_dir}/bucket=0")
     finally:
         base.unpersist()
-    _write_text_meta(
-        spark, path, n_buckets, id_col, "committed",
-        prev["n_docs"] + st["n_docs"],
-        prev["n_docs_tok"] + st["n_docs_tok"],
-        prev["sum_dl"] + st["sum_dl"],
-        append_token if mode == "append" else None,
-        versions=versions,
-    )
-    if mode == "overwrite":
-        from .dedup import _gc_table_versions
-
-        for t in ("postings", "termstats"):
-            _gc_table_versions(path, t, 0)
-
-
-def write_text_index(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 64,
-    mode: str = "overwrite",
-    append_token: "Optional[str]" = None,
-) -> None:
-    """Public face of :func:`_write_text_index_unlocked` (see its
-    docstring), under the index's single-writer lease."""
-    from .dedup import acquire_index_lease, release_index_lease
-
-    lt = acquire_index_lease(path, f"text-{mode}")
-    try:
-        _write_text_index_unlocked(
-            docs, path, id_col, text_col, n_buckets, mode, append_token)
-    finally:
-        release_index_lease(path, lt)
+    return {k: m[k] + st[k] for k in ("n_docs", "n_docs_tok", "sum_dl")}
 
 
 def bm25_indexed(
@@ -372,12 +279,7 @@ def bm25_indexed(
     term-set join over the full postings scan (same result, bounded
     driver), the more-like-this degenerate case."""
     m = _read_text_meta(spark, path)
-    if m["status"] != "committed":
-        raise ValueError(
-            f"text index at {path!r} has status {m['status']!r} — a "
-            "rebuild or append died part-way; re-run it to completion, "
-            "then probe"
-        )
+    C.check_probe(_SPEC, path, m)
     id_col = m["id_col"]
     n = float(m["n_docs"])
     avgdl = (m["sum_dl"] / m["n_docs_tok"]) if m["n_docs_tok"] else 1.0
@@ -387,12 +289,10 @@ def bm25_indexed(
             F.array_distinct(ws_tokens(F.lower(F.col(query_text_col))))
         ).alias("term"),
     )
-    from .dedup import _PUSHDOWN_MIN_INDEX_BYTES, _dir_bytes_at_least
-
     if pushdown_min_index_bytes is None:
-        pushdown_min_index_bytes = _PUSHDOWN_MIN_INDEX_BYTES
-    if not _dir_bytes_at_least(
-        _tdir(path, m["versions"], "postings"), pushdown_min_index_bytes
+        pushdown_min_index_bytes = C._PUSHDOWN_MIN_INDEX_BYTES
+    if not C._dir_bytes_at_least(
+        C.table_dir(path, m, "postings"), pushdown_min_index_bytes
     ):
         # SCALE-ADAPTIVE (r11): below one scan task's worth of postings
         # the bucket/term pushdown cannot cut IO and the query-term
@@ -424,7 +324,7 @@ def bm25_indexed(
         # opt-in recall trade; None stays oracle-exact.
         try:
             tsf = spark.read.parquet(
-                _tdir(path, m["versions"], "termstats"))
+                C.table_dir(path, m, "termstats"))
         except Exception as e:
             raise ValueError(
                 f"text index at {path!r} has no termstats sidecar — "
@@ -454,7 +354,7 @@ def bm25_indexed(
         if hot:
             qterms = qterms.where(~F.col("term").isin(list(hot)))
             tb = [r for r in tb if r["term"] not in hot]
-    post = spark.read.parquet(_tdir(path, m["versions"], "postings"))
+    post = spark.read.parquet(C.table_dir(path, m, "postings"))
     if pushdown:
         terms = [r["term"] for r in tb]
         buckets = sorted({int(r["bucket"]) for r in tb})
@@ -499,89 +399,45 @@ def bm25_indexed(
 
 
 def compact_text_index(spark, path: str) -> None:
-    """Public face of :func:`_compact_text_index_unlocked`, under the
-    single-writer lease."""
-    from .dedup import acquire_index_lease, release_index_lease
-
-    lt = acquire_index_lease(path, "text-compact")
-    try:
-        _compact_text_index_unlocked(spark, path)
-    finally:
-        release_index_lease(path, lt)
-
-
-def _compact_text_index_unlocked(spark, path: str) -> None:
     """Collapse append-accumulated small files, drop retry-duplicate
-    postings, and restore the range-sorted within-partition layout.
-    Both compacted tables are written to their NEXT version dirs
-    (``postings_v<N+1>`` / ``termstats_v<N+1>``, :func:`dedup._vdir`)
-    and the commit is ONE meta-row overwrite flipping the pointers —
-    no remove-then-move window, crash-safe on stores without atomic
-    rename, and probes keep working THROUGHOUT (counters and the
-    append token preserved). A pre-r10 index left mid-swap
-    (``'__compacting__'``) is finished with the legacy move-based
-    recovery."""
-    from .dedup import _dir_exists, _gc_table_versions, _mv_dir, _rm_dir
+    postings, and restore the range-sorted within-partition layout —
+    committed through the shared versioned swap
+    (:func:`._index_core.compact`, counters and token preserved), under
+    the single-writer lease."""
 
-    m = _read_text_meta(spark, path)
+    def rewrite(m: dict, dirs: dict) -> None:
+        id_col = m["id_col"]
+        deduped = spark.read.parquet(C.table_dir(path, m, "postings")) \
+            .dropDuplicates(["term", id_col])
+        deduped.repartition(m["n_buckets"], F.col("bucket")) \
+            .sortWithinPartitions("bucket", "term", id_col) \
+            .write.mode("overwrite").partitionBy("bucket") \
+            .parquet(dirs["postings"])
+        # termstats compacts to ONE exact row per term, recomputed from
+        # the deduped postings — self-healing for any delta drift and
+        # for indexes that predate the sidecar (compacting adds it)
+        deduped.groupBy("term").agg(
+            F.count("*").cast("long").alias("df")
+        ).select(
+            "term", "df", F.lit("__compacted__").alias("token"),
+            _bucket_expr(F.col("term"), m["n_buckets"]).alias("bucket"),
+        ).repartition(m["n_buckets"], F.col("bucket")) \
+            .sortWithinPartitions("bucket", "term") \
+            .write.mode("overwrite").partitionBy("bucket") \
+            .parquet(dirs["termstats"])
+        if m["sum_dl"] == 0:
+            # zero-postings index: the compacted tables would be
+            # fileless — re-pin the schemas (the build-time hazard, at
+            # compact time)
+            deduped.drop("bucket").limit(0).coalesce(1) \
+                .write.mode("overwrite") \
+                .parquet(f"{dirs['postings']}/bucket=0")
+            spark.createDataFrame([], "term string, df long, token string") \
+                .coalesce(1).write.mode("overwrite") \
+                .parquet(f"{dirs['termstats']}/bucket=0")
 
-    if m["status"] == "__compacting__":
-        # legacy (pre-r10) mid-swap recovery
-        for table in ("postings", "termstats"):
-            comp = f"{path}/{table}_compact"
-            if _dir_exists(comp):
-                _rm_dir(f"{path}/{table}")
-                _mv_dir(comp, f"{path}/{table}")
-        _write_text_meta(spark, path, m["n_buckets"], m["id_col"],
-                         "committed", m["n_docs"], m["n_docs_tok"],
-                         m["sum_dl"], m["token"])
-        return
-    if m["status"] != "committed":
-        raise ValueError(
-            f"index at {path!r} has status {m['status']!r} — finish the "
-            "in-flight append first (re-run the same append), then "
-            "compact"
-        )
-    post = spark.read.parquet(_tdir(path, m["versions"], "postings"))
-    id_col = m["id_col"]
-    new_vers = {
-        "postings": m["versions"].get("postings", 0) + 1,
-        "termstats": m["versions"].get("termstats", 0) + 1,
-    }
-    post_dir = _tdir(path, new_vers, "postings")
-    ts_dir = _tdir(path, new_vers, "termstats")
-    deduped = post.dropDuplicates(["term", id_col])
-    deduped.repartition(m["n_buckets"], F.col("bucket")) \
-        .sortWithinPartitions("bucket", "term", id_col) \
-        .write.mode("overwrite").partitionBy("bucket") \
-        .parquet(post_dir)
-    # termstats compacts to ONE exact row per term, recomputed from
-    # the deduped postings — self-healing for any delta drift and for
-    # indexes that predate the sidecar (compacting adds it)
-    deduped.groupBy("term").agg(
-        F.count("*").cast("long").alias("df")
-    ).select(
-        "term", "df", F.lit("__compacted__").alias("token"),
-        _bucket_expr(F.col("term"), m["n_buckets"]).alias("bucket"),
-    ).repartition(m["n_buckets"], F.col("bucket")) \
-        .sortWithinPartitions("bucket", "term") \
-        .write.mode("overwrite").partitionBy("bucket") \
-        .parquet(ts_dir)
-    if m["sum_dl"] == 0:
-        # zero-postings index: the compacted tables would be fileless
-        # — re-pin the schemas (the build-time hazard, at compact time)
-        deduped.drop("bucket").limit(0).coalesce(1) \
-            .write.mode("overwrite") \
-            .parquet(f"{post_dir}/bucket=0")
-        spark.createDataFrame([], "term string, df long, token string") \
-            .coalesce(1).write.mode("overwrite") \
-            .parquet(f"{ts_dir}/bucket=0")
-    # THE commit: one meta overwrite flips both pointers
-    _write_text_meta(spark, path, m["n_buckets"], m["id_col"],
-                     "committed", m["n_docs"], m["n_docs_tok"],
-                     m["sum_dl"], m["token"], versions=new_vers)
-    for t in ("postings", "termstats"):
-        _gc_table_versions(path, t, new_vers[t])
+    with C.index_lease(path, "text-compact"):
+        C.compact(spark, path, _SPEC, rewrite)
 
 
 def text_index_stats(spark, path: str) -> dict:
@@ -589,76 +445,42 @@ def text_index_stats(spark, path: str) -> dict:
     meta status/counters, postings file count + footer rows + bytes,
     bucket row skew (compaction trigger), and duplicate (term, id)
     rows (append-retry residue)."""
-    import collections
-    import os
-
-    import pyarrow.parquet as pq
-
-    from .dedup import _list_parquet_files, _open_listed
-
     m = _read_text_meta(spark, path)
-    out = {
+    post_dir = C.table_dir(path, m, "postings")
+    post = C.scan_footers(post_dir)
+    ts = C.scan_footers(C.table_dir(path, m, "termstats"))
+    df = spark.read.parquet(post_dir)
+    dup = df.count() - df.dropDuplicates(["term", m["id_col"]]).count()
+    return {
         "status": m["status"], "n_buckets": m["n_buckets"],
         "n_docs": m["n_docs"], "n_docs_tok": m["n_docs_tok"],
         "sum_dl": m["sum_dl"],
+        "postings_files": post.files, "postings_rows": post.rows,
+        "postings_bytes": post.bytes,
+        "termstats_files": ts.files, "termstats_rows": ts.rows,
+        "max_rows_per_bucket": int(post.max_part_rows),
+        "bucket_row_skew": post.row_skew,
+        "duplicate_rows": int(dup),
+        # bucket routing is hash-pinned so the only remedy is
+        # compaction — worth it when retry residue taxes every probe or
+        # per-batch appends have shattered the buckets into many small
+        # files
+        "maintenance_hint": C.maintenance_hint(
+            post, dup > 0 or post.fragmented),
     }
-    rows = 0
-    size = 0
-    part_rows: collections.Counter = collections.Counter()
-    post_dir = _tdir(path, m["versions"], "postings")
-    files = _list_parquet_files(post_dir, recursive=True)
-    for fs_, fp in files:
-        with _open_listed(fs_, fp) as fh:
-            nr = pq.ParquetFile(fh).metadata.num_rows
-        rows += nr
-        part_rows[os.path.dirname(fp)] += nr
-        size += (os.path.getsize(fp) if fs_ is None
-                 else fs_.get_file_info(fp).size)
-    out["postings_files"] = len(files)
-    out["postings_rows"] = rows
-    out["postings_bytes"] = size
-    ts_files = _list_parquet_files(
-        _tdir(path, m["versions"], "termstats"), recursive=True)
-    out["termstats_files"] = len(ts_files)
-    ts_rows = 0
-    for fs_, fp in ts_files:
-        with _open_listed(fs_, fp) as fh:
-            ts_rows += pq.ParquetFile(fh).metadata.num_rows
-    out["termstats_rows"] = ts_rows
-    max_pr = max(part_rows.values()) if part_rows else 0
-    mean_pr = (rows / len(part_rows)) if part_rows else 0.0
-    out["max_rows_per_bucket"] = int(max_pr)
-    out["bucket_row_skew"] = round(max_pr / mean_pr, 2) if mean_pr else 0.0
-    df = spark.read.parquet(post_dir)
-    dup = df.count() - df.dropDuplicates(["term", m["id_col"]]).count()
-    out["duplicate_rows"] = int(dup)
-    # maintenance advisory (family symmetry with ivf_index_stats):
-    # bucket routing is hash-pinned so the only remedy is compaction —
-    # worth it when retry residue taxes every probe or per-batch
-    # appends have shattered the buckets into many small files
-    n_buckets = max(len({os.path.dirname(fp) for _, fp in files}), 1)
-    out["maintenance_hint"] = (
-        "compact" if dup > 0 or len(files) > 8 * n_buckets else None
-    )
-    return out
 
 
 # ------------------------------------ streaming face of the text index
 def _stream_text_sink(index_path: str, id_col: str = "doc_id",
                       text_col: str = "text"):
     """The foreachBatch callable behind :func:`index_documents_stream`,
-    factored out so replay idempotence is directly testable — the
-    shared :func:`avro_spark.functions.dedup._token_registry_sink`
-    shape: skip recorded batch ids; append with
-    ``append_token=f"batch{batch_id}"`` (a re-run of a committed batch
-    no-ops inside the append, a crash mid-append heals on the
-    same-token retry with probe-side duplicate absorption); record the
-    batch id LAST."""
-    from .dedup import _token_registry_sink
-
-    return _token_registry_sink(
+    factored out so replay idempotence is directly testable: the shared
+    :func:`._index_core.registry_sink` around a token-carrying append
+    (a re-run of a committed batch no-ops inside the append, a crash
+    mid-append heals on the same-token retry)."""
+    return C.registry_sink(
         index_path,
-        lambda batch_df, token: write_text_index(
+        lambda batch_df, _batch_id, token: write_text_index(
             batch_df, index_path, id_col, text_col, n_buckets=None,
             mode="append", append_token=token,
         ),
@@ -682,13 +504,6 @@ def index_documents_stream(
     collapse per-batch files. One streaming query per index (appends
     are sequential by design, enforced by the writer lease). Returns
     the started ``StreamingQuery``."""
-    sink = _stream_text_sink(index_path, id_col, text_col)
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return C.start_stream(
+        df, _stream_text_sink(index_path, id_col, text_col),
+        checkpoint_dir, trigger_available_now, query_name)

@@ -171,6 +171,19 @@ def test_append_grows_equivalently_with_tokens(spark, tmp_path):
     assert Q._read_ivfpq_meta(spark, path)["status"] == "committed"
 
 
+def test_overwrite_rows_count_only_probeable_vectors(spark, tmp_path):
+    """A null vector gets a null centroid_id, which no probe scans: an
+    overwrite build commits ``rows`` as the live partitions' footer
+    rows, not the batch size."""
+    emb, cents, books, _q, path = _setup(spark, tmp_path)
+    batch = emb.select("vec_id", "embedding").limit(30).unionByName(
+        spark.createDataFrame([(10**9, None)],
+                              "vec_id long, embedding array<float>"))
+    Q.write_ivfpq_index(batch, cents, books, path)
+    st = Q.ivfpq_index_stats(spark, path)
+    assert st["rows"] == st["codes_rows"] == 30
+
+
 def test_compaction_and_stats(spark, tmp_path):
     """Compaction collapses retry residue and preserves answers; stats
     report the measured codes:raw shrink (the module's reason to

@@ -187,3 +187,67 @@ def test_bare_paths_respect_default_fs(spark, tmp_path):
         else:
             hconf.set("fs.defaultFS", old)
         M._DEFAULT_FS_LOCAL.clear()
+
+
+def test_registry_spark_route_resolves_batch_id_by_name(
+        spark, tmp_path, monkeypatch):
+    """The Spark route of ``_read_batch_registry`` (non-local stores)
+    reads 'batch_id' by NAME too — the two registry files of
+    test_registry_resolves_batch_id_by_name, through Spark."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    monkeypatch.setattr(M, "try_read_registry", lambda uri: None)
+    reg = tmp_path / "reg"
+    os.makedirs(reg)
+    pq.write_table(
+        pa.table({"junk": [999], "batch_id": [7]}),
+        str(reg / "part-a.parquet"),
+    )
+    assert D._read_batch_registry(spark, str(reg)) == {7}
+    # no batch_id column: alone (unresolvable) or next to a good file
+    # (read as nulls under its schema) — loud either way
+    alone = tmp_path / "alone"
+    os.makedirs(alone)
+    for d in (alone, reg):
+        pq.write_table(pa.table({"junk": [1]}), str(d / "part-b.parquet"))
+        with pytest.raises(Exception, match="batch_id"):
+            D._read_batch_registry(spark, str(d))
+
+
+def test_meta_spark_route_matches_fast_path(spark, tmp_path, monkeypatch):
+    """Non-local stores commit meta rows through a one-row Spark job:
+    for every index family it writes the same columns, order, types and
+    values as the driver-side fast path."""
+    from avro_spark.functions import exact_index as X
+    from avro_spark.functions import ivfpq_index as Q
+    from avro_spark.functions import similarity as S
+    from avro_spark.functions import text_index as T
+
+    cents = [[1.0, 0.0], [0.0, 1.0]]
+    books = [[[1.0], [2.0]], [[3.0], [4.0]]]
+    writers = {
+        "minhash": lambda p: D._write_index_meta_row(
+            spark, p, 16, 4, 3, 1, "xxhash64", "committed", "t1", None,
+            {"bands": 1}),
+        "exact": lambda p: X._write_exact_meta(
+            spark, p, 8, "doc_id", "__appending__", 5, "t1", "t2"),
+        "text": lambda p: T._write_text_meta(
+            spark, p, 8, "doc_id", "committed", 5, 4, 20),
+        "ivf": lambda p: S._write_ivf_meta(
+            spark, p, cents, "__splitting__", 3, split_cid=1,
+            dir_ids=[0, 2]),
+        "ivfpq": lambda p: Q._write_ivfpq_meta(
+            spark, p, cents, books, "committed", 3),
+    }
+    for name, write in writers.items():
+        fast = str(tmp_path / "fast" / name)
+        slow = str(tmp_path / "slow" / name)
+        write(fast)
+        with monkeypatch.context() as mp:
+            mp.setattr(M, "try_write_meta_row", lambda *a: False)
+            write(slow)
+        got_fast = spark.read.parquet(f"{fast}/meta")
+        got_slow = spark.read.parquet(f"{slow}/meta")
+        assert got_slow.dtypes == got_fast.dtypes, name
+        assert got_slow.head().asDict() == got_fast.head().asDict(), name

@@ -39,7 +39,7 @@ def no_rename(monkeypatch):
             "recovery"
         )
 
-    monkeypatch.setattr(D, "_mv_dir", _refuse)
+    monkeypatch.setattr("avro_spark.functions._index_core._mv_dir", _refuse)
 
 
 def _docs(spark, lo, hi):
